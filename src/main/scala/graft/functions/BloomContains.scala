@@ -2,11 +2,12 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, LongType}
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -61,12 +62,11 @@ case class BloomContains(child: Expression, filterBytes: Array[Byte])
 
 object BloomContains {
 
-  /** Registry builder shared by [[register]] and GraftExtensions:
-    * the second argument must be a foldable BINARY (the serialized
-    * filter) and is folded into the expression at analysis time. */
+  /** `graft_bloom_contains(value, filter_bytes)`'s builder in
+    * [[graft.GraftExtensions]]: the second argument must be a foldable
+    * BINARY (the serialized filter) and is folded into the expression
+    * at analysis time. */
   def build(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 2,
-      "graft_bloom_contains(value, filter_bytes) expects 2 arguments")
     val f = exprs(1)
     require(f.foldable && f.dataType == BinaryType,
       "graft_bloom_contains: filter_bytes must be a BINARY literal")
@@ -78,10 +78,6 @@ object BloomContains {
     BloomContains(exprs.head, bytes)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains", build, "scala_udf")
-
   def serialize(bf: BloomFilter): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
     bf.writeTo(bos)
@@ -90,7 +86,7 @@ object BloomContains {
 
   /** Column helper: `contains(hash_col, filter)`. */
   def contains(v: Column, bf: BloomFilter): Column =
-    call_function("graft_bloom_contains", v, lit(serialize(bf)))
+    Bridge.column(BloomContains(Bridge.expression(v), serialize(bf)))
 
   /** Per-GROUP Bloom build (the x62 index pass): Catalyst's own
     * `BloomFilterAggregate` — a TypedImperativeAggregate, so each map
@@ -99,21 +95,11 @@ object BloomContains {
     * One pass over a file-partitioned table therefore yields one
     * filter PER FILE at manifest-sized total cost. The serialized
     * bytes round-trip through [[BloomFilter.readFrom]], so index
-    * consumers probe with the same sketch library the build used. */
-  def registerAgg(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg",
-      exprs => {
-        require(exprs.length == 3,
-          "graft_bloom_agg(value, est_items, num_bits) expects 3 arguments")
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1), exprs(2)).toAggregateExpression()
-      },
-      "scala_udf")
-
-  /** Column helper: one serialized Bloom filter per group. */
+    * consumers probe with the same sketch library the build used.
+    * SQL name: `graft_bloom_agg`. */
   def bloomAgg(v: Column, estItems: Long, numBits: Long): Column =
-    call_function("graft_bloom_agg", v, lit(estItems), lit(numBits))
+    Bridge.column(new BloomFilterAggregate(
+      Bridge.expression(v), Literal(estItems), Literal(numBits)).toAggregateExpression())
 
   def deserialize(bytes: Array[Byte]): BloomFilter =
     BloomFilter.readFrom(new ByteArrayInputStream(bytes))

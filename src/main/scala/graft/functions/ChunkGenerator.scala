@@ -87,9 +87,6 @@ case class ChunkGenerator(child: Expression, section: Expression,
 }
 
 object ChunkGenerator {
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.catalyst.expressions.Literal
-
   private val ws = java.util.regex.Pattern.compile("\\s+")
 
   /** EXACTLY Spark's `split(trim(c), "\\s+")` / DuckDB's
@@ -109,37 +106,4 @@ object ChunkGenerator {
     val t = s.substring(i, j)
     if (t.isEmpty) Array.empty[String] else ws.split(t, -1)
   }
-
-  /** Register `chunk_windows(text[, section], size, overlap, min_words)`.
-    * The 4-arg form treats every row as a non-abstract section; the
-    * 5-arg form applies the whole-section rule where
-    * `section = 'abstract'`. The three size parameters must be
-    * foldable (literal) expressions — a column reference there is
-    * rejected at analysis time with a clear error instead of an NPE
-    * or an arbitrary value.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "chunk_windows",
-      exprs => {
-        require(exprs.length == 4 || exprs.length == 5,
-          "chunk_windows(text[, section], size, overlap, min_words)")
-        def intArg(e: Expression, name: String): Int = {
-          if (!e.foldable)
-            throw new IllegalArgumentException(
-              s"chunk_windows: argument '$name' must be a literal (foldable) integer, " +
-                s"got non-foldable expression ${e.sql}")
-          e.eval(null) match {
-            case n: Number => n.intValue()
-            case other => throw new IllegalArgumentException(
-              s"chunk_windows: argument '$name' must be an integer literal, got $other")
-          }
-        }
-        val (text, section, rest) =
-          if (exprs.length == 4) (exprs.head, Literal(""), exprs.drop(1))
-          else (exprs.head, exprs(1), exprs.drop(2))
-        ChunkGenerator(text, section, intArg(rest(0), "size"),
-          intArg(rest(1), "overlap"), intArg(rest(2), "min_words"))
-      },
-      "scala_udf")
 }

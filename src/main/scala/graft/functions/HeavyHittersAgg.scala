@@ -130,23 +130,8 @@ case class HeavyHittersAgg(
 }
 
 object HeavyHittersAgg {
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.functions.call_function
-
-  /** Registry builder shared with GraftExtensions: k must be a
-    * literal positive integer. */
-  def build(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 2, "graft_heavy_hitters(term, k) expects 2 arguments")
-    require(exprs(1).foldable, "graft_heavy_hitters: k must be a literal integer")
-    val k = exprs(1).eval(null).asInstanceOf[Number].intValue()
-    HeavyHittersAgg(exprs.head, k).toAggregateExpression()
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_heavy_hitters", build, "scala_udf")
+  import org.apache.spark.sql.graft.Bridge
 
   def heavyHitters(c: Column, k: Int): Column =
-    call_function("graft_heavy_hitters", c,
-      org.apache.spark.sql.functions.lit(k))
+    Bridge.column(HeavyHittersAgg(Bridge.expression(c), k).toAggregateExpression())
 }

@@ -86,28 +86,8 @@ case class SimHashAgg(
 }
 
 object SimHashAgg {
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.functions.call_function
-
-  /** Register `graft_simhash(token_hash[, bits])` (bits: int literal,
-    * default 32). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash",
-      exprs => {
-        require(exprs.length == 1 || exprs.length == 2,
-          "graft_simhash(token_hash[, bits])")
-        val bits =
-          if (exprs.length == 2) {
-            val e = exprs(1)
-            require(e.foldable, "graft_simhash: bits must be a literal integer")
-            e.eval(null).asInstanceOf[Number].intValue()
-          } else 32
-        SimHashAgg(exprs.head, bits).toAggregateExpression()
-      },
-      "scala_udf")
+  import org.apache.spark.sql.graft.Bridge
 
   def simhash(c: Column, bits: Int = 32): Column =
-    call_function("graft_simhash", c,
-      org.apache.spark.sql.functions.lit(bits))
+    Bridge.column(SimHashAgg(Bridge.expression(c), bits).toAggregateExpression())
 }

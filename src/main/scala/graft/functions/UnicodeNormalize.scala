@@ -55,8 +55,4 @@ object NfcNormalize {
     else UTF8String.fromString(
       java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
   }
-
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc", exprs => NfcNormalize(exprs.head), "scala_udf")
 }

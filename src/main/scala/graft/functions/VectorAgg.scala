@@ -87,17 +87,10 @@ case class VectorSumAgg(
 }
 
 object VectorAgg {
-  import org.apache.spark.sql.SparkSession
-
-  /** Register `graft_vector_sum` for use via call_function. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vector_sum",
-      exprs => VectorSumAgg(exprs.head).toAggregateExpression(),
-      "scala_udf")
+  import org.apache.spark.sql.graft.Bridge
 
   def vectorSum(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_vector_sum", c)
+    Bridge.column(VectorSumAgg(Bridge.expression(c)).toAggregateExpression())
   // Element-wise mean: aggregate vectorSum + count(…), then divide
   // outside the aggregation: transform($"vs", _ / $"n").
 }

@@ -126,18 +126,3 @@ case class L2Norm(child: Expression)
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
-
-/** Registration helpers: expose the expressions to the Column API and SQL. */
-object VectorExpressions {
-  import org.apache.spark.sql.SparkSession
-
-  /** Idempotent per-session SQL registration. `call_function` in
-    * VectorOps resolves through this registry.
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_l2norm", exprs => L2Norm(exprs.head), "scala_udf")
-  }
-}

@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import graft.functions.ChunkGenerator
 
 /** G1/G2 — sliding-window word chunker (reference: data/ingestion.py:173-212).
   *
@@ -38,10 +40,9 @@ object Chunker {
   def chunk(df: DataFrame, idCol: String, sectionCol: String, textCol: String,
             size: Int = 200, overlap: Int = 30, minWords: Int = 30): DataFrame = {
     require(overlap < size, "overlap must be < size")
-    graft.functions.ChunkGenerator.register(df.sparkSession)
     df.select(col("*"),
-        call_function("chunk_windows", col(textCol), col(sectionCol),
-          lit(size), lit(overlap), lit(minWords))
+        Bridge.column(ChunkGenerator(Bridge.expression(col(textCol)),
+            Bridge.expression(col(sectionCol)), size, overlap, minWords))
           .as(Seq("chunk_ord", "start", "word_count", "text_content")))
       .withColumn("chunk_id",
         TextFns.chunkId(col(idCol), TextFns.slug(col(sectionCol)), col("chunk_ord")))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.LongType
-import graft.plans.{GlobalIndexPlan, GlobalIndexStrategy}
+import graft.plans.GlobalIndexPlan
 
 /** Scale-safe dense global row index (0-based) in the total order of
   * the given key columns — the replacement for the single-reducer
@@ -35,9 +35,7 @@ object GlobalIndex {
     */
   def withGlobalIndex(df: DataFrame, ordering: Seq[Column], out: String): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(GlobalIndexStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GlobalIndexStrategy
+    graft.GraftExtensions.install(spark)
     // Resolve the ordering Columns to catalyst SortOrders the same way
     // TopK.perKey does: analyze a throwaway sortWithinPartitions plan
     // and lift its resolved Sort node.

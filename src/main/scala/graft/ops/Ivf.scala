@@ -68,8 +68,6 @@ object Ivf {
     * batch) ≡ bucketing (hist ∪ batch) at the same fixed centroids.
     */
   def append(index: Index, batch: DataFrame, vecCol: String): Index = {
-    val spark = batch.sparkSession
-    VectorOps.ensureRegistered(spark)
     val id = index.idCol
     val cents = broadcast(index.centroids
       .withColumn("_cc", VectorOps.dot(col("cvec"), col("cvec"))))
@@ -158,8 +156,6 @@ object Ivf {
       .select(col("qid"), col(index.idCol))
 
   private def candidates(index: Index, queries: DataFrame, nprobe: Int): DataFrame = {
-    val spark = queries.sparkSession
-    VectorOps.ensureRegistered(spark)
     val q = queries.select(col("qid"), col("qvec").cast("array<double>").as("_q"))
     // rank buckets per query by centroid distance; the |q|² term is
     // constant within a query's group, hence rank-neutral — dropped

@@ -52,8 +52,6 @@ object KMeans {
           k: Int, maxIters: Int = 10): (DataFrame, DataFrame) = {
     require(k >= 1 && maxIters >= 1)
     val spark = vectors.sparkSession
-    VectorOps.ensureRegistered(spark)
-    VectorAgg.register(spark)
     import spark.implicits._
 
     val base = vectors
@@ -123,8 +121,6 @@ object KMeans {
                  vecCol: String, k: Int, maxIters: Int = 10): (DataFrame, DataFrame) = {
     require(k >= 1 && maxIters >= 1)
     val spark = vectors.sparkSession
-    VectorOps.ensureRegistered(spark)
-    VectorAgg.register(spark)
     import spark.implicits._
 
     val base = vectors
@@ -216,7 +212,6 @@ object KMeans {
                     k: Int, assignPasses: Int): (DataFrame, DataFrame) = {
     require(k >= 1 && assignPasses >= 1)
     val spark = vectors.sparkSession
-    VectorOps.ensureRegistered(spark)
     import spark.implicits._
 
     val base = vectors

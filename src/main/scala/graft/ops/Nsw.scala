@@ -66,7 +66,6 @@ object Nsw {
     * rows per vector. */
   def blockAssign(vectors: DataFrame, idCol: String, vecCol: String,
                   centroids: DataFrame, blocks: Int): DataFrame = {
-    VectorOps.ensureRegistered(vectors.sparkSession)
     val v = vectors.select(col(idCol), col(vecCol).cast("array<double>").as("_v"))
     val scored = v.crossJoin(broadcast(centroids))
       .withColumn("_cd",
@@ -82,7 +81,6 @@ object Nsw {
   def build(vectors: DataFrame, idCol: String, vecCol: String,
             centroids: DataFrame, blocks: Int, m: Int,
             rounds: Int): DataFrame = {
-    VectorOps.ensureRegistered(vectors.sparkSession)
     val v = vectors.select(col(idCol).as("_nid"),
       col(vecCol).cast("array<double>").as("_nvec"))
     def scored(pairs: DataFrame): DataFrame = pairs
@@ -142,7 +140,6 @@ object Nsw {
   def insert(edges: DataFrame, vectors: DataFrame, idCol: String,
              vecCol: String, centroids: DataFrame, blocks: Int, m: Int,
              newIds: DataFrame): Repair = {
-    VectorOps.ensureRegistered(vectors.sparkSession)
     val v = vectors.select(col(idCol).as("_nid"),
       col(vecCol).cast("array<double>").as("_nvec"))
     def scored(pairs: DataFrame): DataFrame = pairs
@@ -206,7 +203,6 @@ object Nsw {
   def purgeRepair(edges: DataFrame, vectors: DataFrame, idCol: String,
                   vecCol: String, centroids: DataFrame, blocks: Int,
                   m: Int, purged: DataFrame): Repair = {
-    VectorOps.ensureRegistered(vectors.sparkSession)
     val v = vectors.select(col(idCol).as("_nid"),
       col(vecCol).cast("array<double>").as("_nvec"))
     def scored(pairs: DataFrame): DataFrame = pairs
@@ -381,7 +377,6 @@ object Nsw {
                       idCol: String, vecCol: String, queries: DataFrame,
                       upperBeam: Int, upperWalk: Int, beam: Int,
                       walkRounds: Int): (DataFrame, DataFrame) = {
-    VectorOps.ensureRegistered(queries.sparkSession)
     val maxLevel = layers.size - 1
     val v = vectors.select(col(idCol).as("node"),
       col(vecCol).cast("array<double>").as("_nvec"))
@@ -424,7 +419,6 @@ object Nsw {
              vecCol: String, entryNodes: DataFrame, queries: DataFrame,
              beam: Int, walkRounds: Int, topK: Int,
              excludeSelf: Boolean = true): DataFrame = {
-    VectorOps.ensureRegistered(queries.sparkSession)
     val v = vectors.select(col(idCol).as("node"),
       col(vecCol).cast("array<double>").as("_nvec"))
     val q = queries.select(col("qid"), col("qvec").cast("array<double>").as("_q"))
@@ -463,7 +457,6 @@ object Nsw {
                            idCol: String, vecCol: String,
                            entryNodes: DataFrame, queries: DataFrame,
                            beam: Int, walkRounds: Int): Long = {
-    VectorOps.ensureRegistered(queries.sparkSession)
     val v = vectors.select(col(idCol).as("node"),
       col(vecCol).cast("array<double>").as("_nvec"))
     val q = queries.select(col("qid"), col("qvec").cast("array<double>").as("_q"))

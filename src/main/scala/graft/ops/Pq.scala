@@ -90,7 +90,6 @@ object Pq {
     require(m >= 1 && dim % m == 0, s"dim=$dim not divisible by m=$m")
     require(k >= 1 && assignPasses >= 1)
     val spark = vectors.sparkSession
-    VectorOps.ensureRegistered(spark)
     import spark.implicits._
     val subDim = dim / m
     val v = vectors.select(col(idCol), col(vecCol).cast("array<double>").as("_v"))
@@ -173,8 +172,6 @@ object Pq {
     * Queries: (qid, qvec). Output: (qid, nb_id, nb_rank, score) —
     * score is the QUANTIZED dot product Σ_j q_j · c_{code_j}. */
   def search(index: Index, queries: DataFrame, topK: Int): DataFrame = {
-    val spark = queries.sparkSession
-    VectorOps.ensureRegistered(spark)
     val q = queries.select(col("qid"), col("qvec").cast("array<double>").as("_q"))
     // data path: one narrow pass over the codes — m lookups + adds
     val scored = index.encoded.crossJoin(broadcast(lutOf(index, q)))
@@ -194,8 +191,6 @@ object Pq {
     * tie-break semantics to [[search]]. */
   def searchAmong(index: Index, queries: DataFrame, cands: DataFrame,
                   topK: Int): DataFrame = {
-    val spark = queries.sparkSession
-    VectorOps.ensureRegistered(spark)
     val q = queries.select(col("qid"), col("qvec").cast("array<double>").as("_q"))
     val scored = cands.join(index.encoded, index.idCol)
       .join(broadcast(lutOf(index, q)), "qid")

@@ -242,7 +242,6 @@ object StatsCatalog {
     // MG candidates from one bounded-state pass, exact recount of the
     // <= k survivors only. At 100 TB: k-sized shuffle rows, never a
     // full-key groupBy of an unskewed column.
-    graft.functions.HeavyHittersAgg.register(spark)
     val shares: Map[String, Double] = hhCols.map { c =>
       val cand = df.select(graft.functions.HeavyHittersAgg
           .heavyHitters(col(c).cast("string"), HhK).as("cand"))

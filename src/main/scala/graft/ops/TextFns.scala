@@ -67,6 +67,12 @@ object TextFns {
     org.apache.spark.sql.graft.Bridge.column(
       graft.functions.Hash60(org.apache.spark.sql.graft.Bridge.expression(c)))
 
+  /** Unicode NFC normalization via the codegen'd
+    * [[graft.functions.NfcNormalize]] expression (SQL name `graft_nfc`). */
+  def nfc(c: Column): Column =
+    org.apache.spark.sql.graft.Bridge.column(
+      graft.functions.NfcNormalize(org.apache.spark.sql.graft.Bridge.expression(c)))
+
   /** Built-ins-only form of [[hash60]] (same values, slower path). */
   def hash60Composed(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")

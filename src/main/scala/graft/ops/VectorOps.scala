@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.VectorExpressions
+import org.apache.spark.sql.graft.Bridge
+import graft.functions.{DotProduct, L2Norm}
 
 /** Vector operators (SURVEY.md §2.9 V2–V4): cosine scoring, L2
   * normalization, top-k similarity search.
@@ -11,14 +12,11 @@ import graft.functions.VectorExpressions
   *  - `dotHof` — pure built-in higher-order functions; portable, used
   *    as the semantic definition.
   *  - `dot` — the codegen'd [[graft.functions.DotProduct]] expression
-  *    (requires [[ensureRegistered]]); fused loop, no per-row allocs.
+  *    (SQL name `graft_dot`); fused loop, no per-row allocs.
   * Both fold left-to-right so they produce bitwise-identical doubles
   * (and match DuckDB's `list_dot_product` used by the oracle).
   */
 object VectorOps {
-
-  def ensureRegistered(spark: SparkSession): Unit =
-    VectorExpressions.register(spark)
 
   /** v1 dot product: `aggregate(zip_with(a,b,*), 0.0, +)`. */
   def dotHof(a: Column, b: Column): Column =
@@ -26,11 +24,12 @@ object VectorOps {
       zip_with(a.cast("array<double>"), b.cast("array<double>"), (x, y) => x * y),
       lit(0.0), (acc, x) => acc + x)
 
-  /** v2 dot product: custom codegen'd expression (register first). */
-  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+  /** v2 dot product: custom codegen'd expression. */
+  def dot(a: Column, b: Column): Column =
+    Bridge.column(DotProduct(Bridge.expression(a), Bridge.expression(b)))
 
   /** L2 norm via the codegen'd expression. */
-  def l2norm(a: Column): Column = call_function("graft_l2norm", a)
+  def l2norm(a: Column): Column = Bridge.column(L2Norm(Bridge.expression(a)))
 
   /** V4 — L2-normalize an array column (null-safe on zero vectors). */
   def l2normalize(a: Column): Column = {

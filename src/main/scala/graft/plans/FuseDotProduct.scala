@@ -24,7 +24,7 @@ import graft.functions.DotProduct
   * rewrite is bitwise result-preserving — which is what licenses an
   * optimizer rule rather than an API: users keep writing the
   * portable form and every session with [[graft.GraftExtensions]]
-  * (or `experimental.extraOptimizations`) gets the fused plan.
+  * (or `GraftExtensions.install`) gets the fused plan.
   *
   * The guards are deliberately narrow: double-literal zero, a
   * multiply of exactly the two zip-lambda variables, an add of

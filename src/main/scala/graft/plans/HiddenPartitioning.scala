@@ -175,7 +175,7 @@ object HiddenPartitioning {
     // a fresh write lands suffixed partition columns; any legacy
     // column in older files predates THIS spec — untrusted
     registry.put(dir, Spec(transforms, legacyTrusted = false))
-    HiddenPartitionRule.ensureInstalled(spark)
+    graft.GraftExtensions.install(spark)
     v
   }
 
@@ -229,7 +229,7 @@ object HiddenPartitioning {
       // modulus IS the legacy column's modulus — trusted
       registry.put(dir, Spec(ts, legacyTrusted = true))
     }
-    HiddenPartitionRule.ensureInstalled(spark)
+    graft.GraftExtensions.install(spark)
     val ts = registry.getOrElse(dir,
       throw new IllegalArgumentException(s"no hidden-partition spec under $dir"))
       .transforms
@@ -280,9 +280,6 @@ object HiddenPartitioning {
   * the fixed-point guard and the "user knows the layout" escape. */
 object HiddenPartitionRule extends Rule[LogicalPlan] with PredicateHelper {
   import HiddenPartitioning._
-
-  def ensureInstalled(spark: SparkSession): Unit =
-    RuleInstaller.install(spark, HiddenPartitionRule)
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (HiddenPartitioning.isEmpty) plan

@@ -69,22 +69,15 @@ import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
   * (CS_5542_Lab_6 data/ingestion.py); this rule is that pattern as
   * infrastructure — declared once, applied to every matching query.
   *
-  * Installed per session via `spark.experimental.extraOptimizations`
-  * (`ensureInstalled`) and for config-built sessions via
-  * [[graft.GraftExtensions]].
+  * On the [[graft.GraftExtensions]] list: injected into config-built
+  * sessions, and installed into a bare session by
+  * `GraftExtensions.install` when [[MatView.create]] registers a view.
   */
 object MvRewrite extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (MvCatalog.isEmpty) plan
     else plan.transformUp { case agg: Aggregate => tryRewrite(agg).getOrElse(agg) }
-
-  /** Idempotently add the rule to an already-built session's
-    * optimizer (the "User Provided Optimizers" batch — runs after
-    * view inlining, project collapse and column pruning, so the
-    * Aggregate-over-scan shape below is what actually arrives). */
-  def ensureInstalled(spark: SparkSession): Unit =
-    RuleInstaller.install(spark, MvRewrite)
 
   /** Canonical signature of one leaf scan (its sorted root paths) —
     * the unit of the COVERAGE match below. */
@@ -333,21 +326,6 @@ object MvRewrite extends Rule[LogicalPlan] {
   }
 }
 
-/** ONE lock for every injected-rule installation: two rules each
-  * guarding the read-modify-write of the SAME
-  * `spark.experimental.extraOptimizations` var with their own locks
-  * is a lost-update race — an install could silently drop the other
-  * rule. */
-private[plans] object RuleInstaller {
-  private val lock = new Object
-  def install(spark: SparkSession, rule: Rule[LogicalPlan]): Unit =
-    lock.synchronized {
-      if (!spark.experimental.extraOptimizations.exists(_ eq rule))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ rule
-    }
-}
-
 /** The registered-MV registry [[MvRewrite]] consults. Process-wide
   * (the rule object is a singleton); definitions are keyed by name
   * and matched to queries by EXACT leaf-scan coverage — the query
@@ -515,7 +493,7 @@ object MatView {
       specs = specs,
       mvDir = mvDir,
       sizeHint = () => Snapshots.latestBytes(spark, mvDir)))
-    MvRewrite.ensureInstalled(spark)
+    graft.GraftExtensions.install(spark)
     mv
   }
 

@@ -105,16 +105,13 @@ object TopK {
 
   /** Top `k` rows per key group, ranked by `orderBy` (include a
     * unique tie-break column for deterministic results). Installs
-    * [[TopKPerKeyStrategy]] on the session's experimental strategies
-    * (idempotent); also injectable for all sessions via
-    * [[graft.GraftExtensions]].
+    * [[TopKPerKeyStrategy]] through `GraftExtensions.install`
+    * (idempotent).
     */
   def perKey(df: DataFrame, keyCols: Seq[String], orderBy: Seq[Column],
              k: Int): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
+    graft.GraftExtensions.install(spark)
     // Let the analyzer resolve the sort expressions: build a throwaway
     // sortWithinPartitions plan and lift its fully-resolved catalyst
     // SortOrders + child (Column carries a lazy node that only the

@@ -143,12 +143,11 @@ object DedupQ {
   /** Session-memoized SimHash signatures (d4 and d8 share it). */
   private def simhashOf(s: SparkSession, d: String): DataFrame =
     Derived.of(s, d, "simhash") {
-      graft.functions.SimHashAgg.register(s)
       docs(s, d)
         .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("token"))
         .withColumn("th", TextFns.hash60(col("token")))
         .groupBy(col("doc_id"))
-        .agg(call_function("graft_simhash", col("th"), lit(SimHashBits)).as("simhash"))
+        .agg(graft.functions.SimHashAgg.simhash(col("th"), SimHashBits).as("simhash"))
     }
 
   /** Distinct word-[[DecontamN]]-grams per document plus the t6 split
@@ -261,7 +260,6 @@ object DedupQ {
     * even when both consumers ask — built outside Derived's lock
     * (clustersOf pattern) because sketch construction runs jobs. */
   private def decontamStreams(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.BloomContains.register(s)
     val ng = splitNgramsOf(s, d)
     val testNg = ng.filter(col("split") === "test")
       .select(col("ngram")).distinct()
@@ -758,7 +756,6 @@ object DedupQ {
     // d5 — embedding-cosine near-dup, label-blocked (the IVF-bucket
     // analogue: pairs only form inside a label bucket, never n²).
     "d5_dedup_embedding" -> ((s, d) => {
-      VectorOps.ensureRegistered(s)
       val e = Tables.load(s, d, "embeddings")
         .select(col("vec_id"), col("label"), col("embedding"))
       val a = e.select(col("label"), col("vec_id").as("a_id"), col("embedding").as("ea"))

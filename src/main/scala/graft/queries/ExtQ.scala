@@ -149,8 +149,6 @@ object ExtQ {
     * this method separately and reports it as `v6_fast_only_sec`, the
     * number the fast path actually earns. */
   def v6FastPath(s: SparkSession, d: String): DataFrame = {
-    VectorOps.ensureRegistered(s)
-    VectorAgg.register(s)
     val e = Tables.load(s, d, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"))
     val cvecs = e.groupBy(col("label"))
@@ -687,7 +685,6 @@ object ExtQ {
     // summary) makes the final answer exact — unlike x1/x4 this
     // sketch query carries a full DuckDB oracle.
     "x10_heavy_hitters" -> ((s, d) => {
-      graft.functions.HeavyHittersAgg.register(s)
       val toks = Tables.load(s, d, "documents")
         .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
         .select(explode(graft.ops.TextFns.tokens(col("text"))).as("tok"))
@@ -721,7 +718,6 @@ object ExtQ {
     // candidates recounted exactly, thresholded on the group's own
     // stream length.
     "x15_heavy_hitters_grouped" -> ((s, d) => {
-      graft.functions.HeavyHittersAgg.register(s)
       val toks = Tables.load(s, d, "documents")
         .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
         .select(col("lang"),
@@ -774,7 +770,7 @@ object ExtQ {
     // surface, not just the Column API. Decimal-exact energy sum
     // (order-independent, see dsum2's rationale).
     "q29_sql_script" -> ((s, d) => {
-      VectorOps.ensureRegistered(s)
+      graft.GraftExtensions.install(s)
       graft.Tables.registerAll(s, d)
       val script =
         """-- S8: statements split on ';', '--' comment lines stripped,
@@ -850,7 +846,6 @@ object ExtQ {
     // Σ cluster², never n²) — cluster count is the knob that keeps
     // blocks bounded, exactly as in the paper.
     "v14_semdedup" -> ((s, d) => {
-      VectorOps.ensureRegistered(s)
       val vecs = Tables.load(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val asg = graft.ops.KMeans.fitExact(vecs, "vec_id", "embedding",
@@ -892,7 +887,6 @@ object ExtQ {
     // candidate pairs are Σ cluster² ≈ n·KnnBlockRows, and the heap
     // bounds both memory and the shuffle to K rows per vector.
     "v21_knn_join" -> ((s, d) => {
-      VectorOps.ensureRegistered(s)
       val vecs = Tables.load(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val asg = graft.ops.KMeans.fitExact(vecs, "vec_id", "embedding",

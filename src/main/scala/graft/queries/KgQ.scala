@@ -476,7 +476,6 @@ object KgQ {
     // tools.py:45-92): score chunks against a query vector, top-5,
     // project chunk + paper metadata.
     "k7_search_chunks" -> ((s, d) => {
-      VectorOps.ensureRegistered(s)
       val emb = Tables.load(s, d, "embeddings")
       val q = emb.filter(col("vec_id") === 0)
         .select(col("embedding").as("qe"))

@@ -351,7 +351,6 @@ object StatsQ {
     "x62_bloom_skip" -> ((s, d) => {
       import graft.sources.Snapshots
       import graft.functions.BloomContains
-      BloomContains.registerAgg(s)
       // the ~80-dir month-partitioned layout is the committer-bound
       // prologue; the index build + probes below are the operator
       val dir = Fixtures.ensure(s, d, "x62_bloom",
@@ -562,7 +561,6 @@ object StatsQ {
     // and FPs never reach the output (the exact join removes them),
     // so the hash is unchanged by construction.
     "x38_bloom_join" -> ((s, d) => {
-      graft.functions.BloomContains.register(s)
       val dim = Tables.load(s, d, "customer")
         .filter(col("c_mktsegment") === "BUILDING")
         .select(col("c_custkey"), col("c_name"))

@@ -1130,14 +1130,13 @@ object TextQ {
     // nfc_normalize. Narrow map over the scan — no shuffle, stays
     // inside WholeStageCodegen.
     "t24_nfc_normalize" -> ((s, d) => {
-      graft.functions.NfcNormalize.ensureRegistered(s)
       docs(s, d)
         .select(col("doc_id"),
           concat(substring(col("text"), 1, 40), lit(NfcProbe)).as("raw"))
         .select(col("doc_id"),
-          call_function("graft_nfc", col("raw")).as("norm_text"),
+          TextFns.nfc(col("raw")).as("norm_text"),
           length(col("raw")).cast("long").as("n_raw"),
-          length(call_function("graft_nfc", col("raw"))).cast("long").as("n_norm"))
+          length(TextFns.nfc(col("raw"))).cast("long").as("n_norm"))
         .orderBy(col("doc_id"))
     }),
 

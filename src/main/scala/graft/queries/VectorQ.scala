@@ -187,7 +187,6 @@ object VectorQ {
     * hash-derived (reconstructible in SQL); they fold to literals at
     * plan time. */
   private def lshBucketedOf(s: SparkSession, d: String): DataFrame = {
-    VectorOps.ensureRegistered(s)
     def plane(p: Int) = transform(sequence(lit(0), lit(EmbDim - 1)),
       dd => (graft.ops.TextFns.hash60(
         concat(lit(s"lsh|$p|"), dd.cast("string"))) % 2001 - 1000) / lit(1000.0))
@@ -287,7 +286,6 @@ object VectorQ {
     // of vec_id 0 (broadcast, one row); corpus scan scored by the
     // codegen'd dot product; TakeOrderedAndProject for the top-k.
     "v1_cosine_topk" -> ((s, d) => {
-      VectorOps.ensureRegistered(s)
       val e = emb(s, d)
       val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
       e.filter(col("vec_id") =!= 0)
@@ -311,7 +309,6 @@ object VectorQ {
     // decision is bitwise-identical (the property v1's ORDER BY
     // already relies on).
     "v19_radius_search" -> ((s, d) => {
-      VectorOps.ensureRegistered(s)
       val e = emb(s, d)
       val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
       e.filter(col("vec_id") =!= 0)
@@ -341,7 +338,6 @@ object VectorQ {
     // the legs are the scale story (t10's pre-shuffle term filter,
     // v1's broadcast query); fusion cost is O(L), corpus-independent.
     "v23_hybrid_rrf" -> ((s, d) => {
-      VectorOps.ensureRegistered(s)
       val lexTop = graft.queries.TextQ.bm25Frame(s, d)
         .filter(col("doc_id") =!= 0)
         .orderBy(col("bm25").desc, col("doc_id"))
@@ -373,7 +369,6 @@ object VectorQ {
 
     // v2 — V4: L2 norm + dimension audit of every vector.
     "v2_vector_norms" -> ((s, d) => {
-      VectorOps.ensureRegistered(s)
       emb(s, d)
         .select(col("vec_id"),
           round(VectorOps.l2norm(col("embedding")), 4).as("l2_norm"),
@@ -385,7 +380,6 @@ object VectorQ {
     // vectors as JSON-in-VARCHAR, data/ingestion.py:471-473). Parse
     // back as float and prove dot(parsed, orig) == dot(orig, orig).
     "v3_json_roundtrip" -> ((s, d) => {
-      VectorOps.ensureRegistered(s)
       emb(s, d)
         .withColumn("parsed",
           from_json(to_json(col("embedding")), "array<float>",
@@ -433,7 +427,6 @@ object VectorQ {
     }),
 
     "v4_knn_bruteforce" -> ((s, d) => {
-      VectorOps.ensureRegistered(s)
       val e = emb(s, d)
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -463,7 +456,6 @@ object VectorQ {
     // MEASUREMENT (n_postfilter < k = the trap, quantified). Both
     // paths broadcast the query set and keep the fact scan pruned.
     "v22_filtered_topk" -> ((s, d) => {
-      VectorOps.ensureRegistered(s)
       val e = Tables.load(s, d, "embeddings")
         .select(col("vec_id"), col("label"), col("embedding"))
       val q = e.filter(col("vec_id") < 5)
@@ -499,7 +491,6 @@ object VectorQ {
     // At scale this is the coarse-quantizer pattern: candidate set
     // shrinks by ~n_labels×, the buckets are co-partitioned by label.
     "v5_knn_ivf" -> ((s, d) => {
-      VectorOps.ensureRegistered(s)
       val e = Tables.load(s, d, "embeddings")
         .select(col("vec_id"), col("label"), col("embedding"))
       val dims = e.select(col("label"),
@@ -683,7 +674,6 @@ object VectorQ {
     // landing, or a mis-assigned resumed append each breaks it.
     "v26_retrain_loop" -> ((s, d) => {
       import graft.sources.Snapshots
-      VectorOps.ensureRegistered(s)
       val e = emb(s, d)
       val hist = e.filter(col("vec_id") % AppendSplitMod < AppendHistMax)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
@@ -743,7 +733,6 @@ object VectorQ {
     // score, rank — carries a plain hash oracle with no unrolled
     // training CTEs.
     "v11_knn_sq8" -> ((s, d) => {
-      VectorOps.ensureRegistered(s)
       val e = emb(s, d)
       val enc = graft.ops.Sq.encode(e, "vec_id", "embedding")
       val q = e.filter(col("vec_id") < 5)
@@ -797,7 +786,6 @@ object VectorQ {
     // whole composition — coarse probe, ADC shortlist, exact
     // re-rank — carries a full hash oracle.
     "v28_pq_refine" -> ((s, d) => {
-      VectorOps.ensureRegistered(s)
       val e = emb(s, d)
       val ivf = learnedIndex(s, d)
       val pq = pqIndex(s, d)
@@ -1002,7 +990,6 @@ object VectorQ {
     // from the embeddings table alone. The adjacency is Derived-
     // shared (built once per session — the production shape).
     "v30_graph_ann" -> ((s, d) => {
-      VectorOps.ensureRegistered(s)
       val idx = learnedIndex(s, d)
       val e = emb(s, d)
       val edges = Derived.of(s, d, "nsw_edges") {
@@ -1045,7 +1032,6 @@ object VectorQ {
     // layer populations are pinned so the assignment itself is
     // checked. NswSpec pins the touched-candidate bound.
     "v38_hnsw_descent" -> ((s, d) => {
-      VectorOps.ensureRegistered(s)
       val idx = learnedIndex(s, d)
       val e = emb(s, d)
       val layer0 = Derived.of(s, d, "nsw_edges") {
@@ -1102,7 +1088,6 @@ object VectorQ {
     // lose.
     "v39_hnsw_persisted" -> ((s, d) => {
       import graft.sources.Snapshots
-      VectorOps.ensureRegistered(s)
       val idx = learnedIndex(s, d)
       val e = emb(s, d)
       val layer0 = Derived.of(s, d, "nsw_edges") {
@@ -1188,7 +1173,6 @@ object VectorQ {
     // |batch|·block-mates cost, serve from committed state anywhere.
     "v31_graph_index_lifecycle" -> ((s, d) => {
       import graft.sources.Snapshots
-      VectorOps.ensureRegistered(s)
       val idx = historyIndex(s, d)
       val e = emb(s, d)
       val hist = e.filter(col("vec_id") % AppendSplitMod < AppendHistMax)
@@ -1267,7 +1251,6 @@ object VectorQ {
     // oracle replays graph build → PQ training → decode → PQ-priced
     // walk → exact re-rank → recall from the embeddings table alone.
     "v32_pq_graph_walk" -> ((s, d) => {
-      VectorOps.ensureRegistered(s)
       val idx = learnedIndex(s, d)
       val e = emb(s, d)
       val edges = Derived.of(s, d, "nsw_edges") {
@@ -1317,7 +1300,6 @@ object VectorQ {
     // regression OR a selection regression breaks the hash.
     "v33_beam_tuning" -> ((s, d) => {
       import s.implicits._
-      VectorOps.ensureRegistered(s)
       val idx = learnedIndex(s, d)
       val e = emb(s, d)
       val edges = Derived.of(s, d, "nsw_edges") {
@@ -1356,7 +1338,6 @@ object VectorQ {
     // hashed output next to the over-fetched result itself, so the
     // hash pins the trap's size AND the repair's recall at once.
     "v34_filtered_graph_walk" -> ((s, d) => {
-      VectorOps.ensureRegistered(s)
       val idx = learnedIndex(s, d)
       val el = Tables.load(s, d, "embeddings")
         .select(col("vec_id"), col("label"), col("embedding"))
@@ -1431,7 +1412,6 @@ object VectorQ {
     // fired generation, searchers never observing a torn index.
     "v35_graph_drift_retrain" -> ((s, d) => {
       import graft.sources.Snapshots
-      VectorOps.ensureRegistered(s)
       val idx = historyIndex(s, d)
       val e = emb(s, d)
       val hist = e.filter(col("vec_id") % AppendSplitMod < AppendHistMax)
@@ -1525,7 +1505,6 @@ object VectorQ {
     // deciding when the loop escalates to a retrain.
     "x108_cdf_index_pipeline" -> ((s, d) => {
       import graft.sources.Snapshots
-      VectorOps.ensureRegistered(s)
       val e = emb(s, d)
       val srcDir = freshSnapDir(s, d, "x108_src")
       val curDir = freshSnapDir(s, d, "x108_cursor")
@@ -1596,7 +1575,6 @@ object VectorQ {
     // version — GDPR erasure at index scale without a rebuild.
     "v36_index_rtbf" -> ((s, d) => {
       import graft.sources.Snapshots
-      VectorOps.ensureRegistered(s)
       val e = emb(s, d)
       val idx = learnedIndex(s, d)
       val edges = Derived.of(s, d, "nsw_edges") {
@@ -1689,7 +1667,6 @@ object VectorQ {
     // search a single-scan plan.
     "v37_graph_index_compaction" -> ((s, d) => {
       import graft.sources.Snapshots
-      VectorOps.ensureRegistered(s)
       val idx = historyIndex(s, d)
       val e = emb(s, d)
       val hist = e.filter(col("vec_id") % AppendSplitMod < AppendHistMax)
@@ -1766,7 +1743,6 @@ object VectorQ {
     // dot products, so selection order is engine-reproducible and the
     // unrolled-CTE oracle hash-matches.
     "v18_mmr_rerank" -> ((s, d) => {
-      VectorOps.ensureRegistered(s)
       val e = emb(s, d)
       val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
       val cand = e.filter(col("vec_id") =!= 0)
@@ -1831,7 +1807,6 @@ object VectorQ {
     * pin the degenerate identity (shortK ≥ corpus ⇒ ≡ v4 exactly). */
   def truncatedRerank(s: SparkSession, d: String,
       prefDims: Int, shortK: Int): DataFrame = {
-    VectorOps.ensureRegistered(s)
     val e = emb(s, d)
     val q = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))

@@ -17,7 +17,6 @@ object Tools {
     * literal/broadcastable vector column.
     */
   def searchPapers(chunksV: DataFrame, queryVec: Column, topK: Int = 5): DataFrame = {
-    VectorOps.ensureRegistered(chunksV.sparkSession)
     chunksV
       .withColumn("score_raw", VectorOps.cosine(col("embedding"), queryVec))
       .orderBy(col("score_raw").desc, col("chunk_id"))

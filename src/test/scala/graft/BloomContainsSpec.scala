@@ -21,7 +21,6 @@ class BloomContainsSpec extends SparkSpec {
     import spark.implicits._
     val inserted = (0L until 2000L).map(i => i * 2654435761L)
     val bf = filterOf(inserted)
-    BloomContains.register(spark)
     val df = inserted.toDF("h")
     val n = df.filter(BloomContains.contains(col("h"), bf)).count()
     assert(n == inserted.size, "a Bloom filter must never drop an inserted element")
@@ -31,7 +30,6 @@ class BloomContainsSpec extends SparkSpec {
     import spark.implicits._
     val inserted = (0L until 2000L).map(i => i * 2654435761L)
     val bf = filterOf(inserted)
-    BloomContains.register(spark)
     // disjoint probe set (odd multiples of a different stride)
     val absent = (0L until 20000L).map(i => i * 7919L + 1L)
     val hits = absent.toDF("h")

@@ -17,7 +17,6 @@ class BloomSkipSpec extends SparkSpec {
     java.nio.file.Files.createTempDirectory("bloomskip").toString + "/t"
 
   test("per-shard bloom index: sound probe, exact pruned read, physical file skipping") {
-    BloomContains.registerAgg(spark)
     val dir = freshDir()
     // 4 shards; key 7 lives ONLY in shards s0 and s2 — a scattered
     // key layout where min/max zone maps (all shards span 1..999)
@@ -62,7 +61,6 @@ class BloomSkipSpec extends SparkSpec {
   }
 
   test("partial merge across tasks equals a single-task build") {
-    BloomContains.registerAgg(spark)
     val many = spark.range(0, 2000).select((col("id") % 97).as("k"))
     def buildWith(parts: Int) = {
       val bytes = many.repartition(parts)

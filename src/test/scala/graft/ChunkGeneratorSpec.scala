@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.ChunkGenerator
 import graft.ops.TextFns
 
 /** The native Generator chunker must be row-for-row equivalent to an
@@ -47,7 +46,7 @@ class ChunkGeneratorSpec extends SparkSpec {
   private def words(n: Int): String = (1 to n).map(i => s"w$i").mkString(" ")
 
   private def compare(df: DataFrame): Unit = {
-    ChunkGenerator.register(spark)
+    GraftExtensions.install(spark)
     df.createOrReplaceTempView("gen_docs")
     val viaGen = spark.sql(
       """SELECT paper_id, chunk_ord, start, word_count, text_content
@@ -97,7 +96,7 @@ class ChunkGeneratorSpec extends SparkSpec {
   }
 
   test("generator handles null/empty/short text") {
-    ChunkGenerator.register(spark)
+    GraftExtensions.install(spark)
     Seq(("a", null: String), ("b", ""), ("c", "too short"))
       .toDF("id", "text").createOrReplaceTempView("gen_edge")
     val out = spark.sql(

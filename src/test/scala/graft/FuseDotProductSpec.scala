@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.functions.DotProduct
 import graft.ops.VectorOps
-import graft.plans.FuseDotProduct
 
 /** The HOF-dot-product fusion rule: plan rewrite fires on the exact
   * portable pattern, preserves results bitwise, and leaves
@@ -11,12 +10,7 @@ import graft.plans.FuseDotProduct
   */
 class FuseDotProductSpec extends SparkSpec {
 
-  private lazy val ruleInstalled = {
-    if (!spark.experimental.extraOptimizations.contains(FuseDotProduct))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ FuseDotProduct
-    true
-  }
+  private lazy val ruleInstalled = { GraftExtensions.install(spark); true }
 
   private def hasDotProduct(df: org.apache.spark.sql.DataFrame): Boolean = {
     var found = false
@@ -36,7 +30,6 @@ class FuseDotProductSpec extends SparkSpec {
 
   test("rewrite preserves results bitwise vs both original forms") {
     assert(ruleInstalled)
-    VectorOps.ensureRegistered(spark)
     val e = Tables.load(spark, Sf0001, "embeddings")
     val both = e.select(
       VectorOps.dotHof(col("embedding"), col("embedding")).as("hof"),

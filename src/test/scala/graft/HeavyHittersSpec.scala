@@ -20,7 +20,6 @@ class HeavyHittersSpec extends SparkSpec {
   }
 
   private def candidates(k: Int, parts: Int): Set[String] = {
-    HeavyHittersAgg.register(spark)
     stream.toDF("term").repartition(parts)
       .agg(HeavyHittersAgg.heavyHitters(col("term"), k).as("c"))
       .select(explode(col("c")).as("t")).as[String].collect().toSet
@@ -46,7 +45,6 @@ class HeavyHittersSpec extends SparkSpec {
     // state store keeps the serialized MG buffer and merges each
     // micro-batch's partials into it
     import org.apache.spark.sql.streaming.OutputMode
-    HeavyHittersAgg.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("hhstream").toString
     val (b1, b2) = stream.splitAt(stream.size / 2)
     b1.toDF("term").write.mode("append").parquet(dir)

@@ -17,7 +17,6 @@ class IvfSpec extends SparkSpec {
   private lazy val index = Ivf.build(vecs, "vec_id", "embedding", k = 4, iters = 3)
 
   private def bruteForce(topK: Int) = {
-    VectorOps.ensureRegistered(spark)
     val scored = vecs.join(broadcast(queries), col("vec_id") =!= col("qid"))
       .withColumn("score", VectorOps.dot(
         col("qvec").cast("array<double>"), col("embedding").cast("array<double>")))

@@ -11,11 +11,10 @@ class NfcSpec extends SparkSpec {
   private val composed = "résumé"     // precomposed é ×2
 
   test("composes decomposed forms, passes composed/ASCII through, idempotent") {
-    graft.functions.NfcNormalize.ensureRegistered(spark)
     import spark.implicits._
     val out = Seq(decomposed, composed, "plain ascii", "")
       .toDF("s")
-      .select(call_function("graft_nfc", col("s")).as("n"))
+      .select(graft.ops.TextFns.nfc(col("s")).as("n"))
       .as[String].collect()
     assert(out(0) == composed && out(1) == composed)
     assert(out(2) == "plain ascii" && out(3) == "")
@@ -25,7 +24,6 @@ class NfcSpec extends SparkSpec {
   }
 
   test("interpreted eval matches the codegen'd DataFrame path") {
-    graft.functions.NfcNormalize.ensureRegistered(spark)
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.unsafe.types.UTF8String
     for (s <- Seq(decomposed, composed, "å", "mixed é and é")) {
@@ -33,21 +31,20 @@ class NfcSpec extends SparkSpec {
         .eval(null).asInstanceOf[UTF8String].toString
       import spark.implicits._
       val gen = Seq(s).toDF("s")
-        .select(call_function("graft_nfc", col("s"))).as[String].head()
+        .select(graft.ops.TextFns.nfc(col("s"))).as[String].head()
       assert(interp == gen, s"paths diverge on ${s.codePoints().toArray.toSeq}")
       assert(interp == java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFC))
     }
   }
 
   test("nulls stay null; non-string input rejected at analysis") {
-    graft.functions.NfcNormalize.ensureRegistered(spark)
     import spark.implicits._
     val r = Seq[Option[String]](None, Some(decomposed)).toDF("s")
-      .select(call_function("graft_nfc", col("s")).as("n"))
+      .select(graft.ops.TextFns.nfc(col("s")).as("n"))
       .collect()
     assert(r(0).isNullAt(0) && r(1).getString(0) == composed)
     intercept[org.apache.spark.sql.AnalysisException] {
-      Seq(1).toDF("i").select(call_function("graft_nfc", col("i"))).collect()
+      Seq(1).toDF("i").select(graft.ops.TextFns.nfc(col("i"))).collect()
     }
   }
 }

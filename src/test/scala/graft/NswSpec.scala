@@ -237,7 +237,6 @@ class NswSpec extends SparkSpec {
     // union) so the candidate side carries the real walk's size
     // estimates -- a bare toy frame would broadcast and flip the
     // build side, a regime the walk never plans in.
-    graft.ops.VectorOps.ensureRegistered(spark)
     import graft.ops.Lineage.CutOps
     val v = corpus(80)
     val idx = centroidsOf(v)
@@ -286,7 +285,6 @@ class NswSpec extends SparkSpec {
 
   test("v38: levels nest geometrically, the hierarchy is deterministic, empty layers degrade") {
     val v = corpus(200)
-    graft.ops.VectorOps.ensureRegistered(spark)
     val lvl = v.select(col("vec_id"), Nsw.levelOf(col("vec_id"), 2).as("l"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     // deterministic: a pure function of the ids
@@ -422,7 +420,6 @@ class NswSpec extends SparkSpec {
       .select(col("qid"), col("nb_id"), col("score"))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     // decoded pricing: dot(q, reconstruct(code))
-    graft.ops.VectorOps.ensureRegistered(spark)
     val recon = graft.ops.Pq.reconstruct(pq)
     val dec = q.crossJoin(recon.withColumnRenamed("vec_id", "nb_id"))
       .filter(col("nb_id") =!= col("qid"))

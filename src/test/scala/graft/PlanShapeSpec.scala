@@ -272,7 +272,6 @@ class PlanShapeSpec extends SparkSpec {
     // the candidate sub-plan (the final plan sees only checkpointed
     // leaves).
     import org.apache.spark.sql.functions._
-    graft.ops.VectorOps.ensureRegistered(spark)
     val e = Tables.load(spark, Sf0001, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))

@@ -34,7 +34,6 @@ class PqSpec extends SparkSpec {
   }
 
   test("ADC score equals dot(query, reconstruction) up to re-association") {
-    VectorOps.ensureRegistered(spark)
     val q = emb.filter(col("vec_id") < 3)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val adc = Pq.search(index, q, topK = 5)
@@ -54,7 +53,6 @@ class PqSpec extends SparkSpec {
   }
 
   test("reconstruction error beats the zero-vector baseline") {
-    VectorOps.ensureRegistered(spark)
     val joined = emb
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .join(Pq.reconstruct(index), "vec_id")
@@ -70,7 +68,6 @@ class PqSpec extends SparkSpec {
   }
 
   test("recall@3 vs exact brute force is non-trivial") {
-    VectorOps.ensureRegistered(spark)
     val q = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val exact = emb.join(broadcast(q), col("vec_id") =!= col("qid"))
@@ -95,7 +92,6 @@ class PqSpec extends SparkSpec {
   }
 
   test("a finer quantizer (m=8) reconstructs better than m=4") {
-    VectorOps.ensureRegistered(spark)
     def mse(ix: Pq.Index): Double = emb
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .join(Pq.reconstruct(ix), "vec_id")
@@ -108,7 +104,6 @@ class PqSpec extends SparkSpec {
   }
 
   test("v28: the refine stage serves EXACT scores, exactly ranked, from within the shortlist") {
-    VectorOps.ensureRegistered(spark)
     val out = SparkEntry.queries("v28_pq_refine")(spark, Sf0001).collect()
     assert(out.nonEmpty)
     val vecs = emb.collect()

@@ -41,7 +41,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("cosine(v, v) == 1 for arbitrary non-zero vectors") {
-    VectorOps.ensureRegistered(spark)
     val gen = Gen.listOfN(16, Gen.choose(-100.0f, 100.0f))
       .suchThat(_.exists(v => math.abs(v) > 1e-3))
     val vs = samples(gen, 50, seed = 7L).map(_.toArray)

@@ -53,39 +53,4 @@ class SkewSpec extends SparkSpec {
     val out = Skew.withDfCap(df, "key", "doc", maxDf = 2)
     assert(out.select("key").distinct().as[String].collect().toSeq == Seq("rare"))
   }
-
-  test("GraftExtensions: functions usable from pure SQL in an extended session") {
-    import org.apache.spark.sql.SparkSession
-    spark.sparkContext // make sure the shared context exists first
-    val prev = SparkSession.getActiveSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    // getOrCreate would return the active session (without the
-    // extensions); clearing forces a fresh SparkSession on the same
-    // SparkContext with GraftExtensions applied.
-    val s2 = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      val r = s2.sql(
-        "SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d, " +
-        "graft_l2norm(array(3.0D, 4.0D)) AS n").head
-      assert(r.getDouble(0) == 11.0 && r.getDouble(1) == 5.0)
-      val agg = s2.sql(
-        "SELECT graft_vector_sum(v) AS vs FROM VALUES (array(1.0D)), (array(2.0D)) t(v)")
-        .head.getSeq[Double](0)
-      assert(agg == Seq(3.0))
-    } finally {
-      org.apache.spark.sql.SparkSession.clearActiveSession()
-      org.apache.spark.sql.SparkSession.clearDefaultSession()
-      prev.foreach { p =>
-        org.apache.spark.sql.SparkSession.setActiveSession(p)
-        org.apache.spark.sql.SparkSession.setDefaultSession(p)
-      }
-    }
-  }
 }

@@ -38,7 +38,6 @@ class SqSpec extends SparkSpec {
   }
 
   test("asymmetric scores land within the quantization bound of exact dots") {
-    VectorOps.ensureRegistered(spark)
     val enc = Sq.encode(embs, "vec_id", "embedding")
     val q = embs.filter(col("vec_id") === 0)
       .select(col("embedding").as("qe"))

@@ -6,10 +6,7 @@ import graft.functions.VectorAgg
 class VectorAggSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val registered = { VectorAgg.register(spark); true }
-
   test("vectorSum: element-wise sum across rows") {
-    assert(registered)
     val df = Seq(
       (0, Array(1.0f, 2.0f)), (0, Array(3.0f, 4.0f)), (1, Array(10.0f, 20.0f)))
       .toDF("g", "v")
@@ -20,7 +17,6 @@ class VectorAggSpec extends SparkSpec {
   }
 
   test("vectorSum skips null rows, all-null group yields null") {
-    assert(registered)
     val df = Seq((0, Some(Array(1.0f))), (0, None), (1, None)).toDF("g", "v")
     val out = df.groupBy("g").agg(VectorAgg.vectorSum(col("v")).as("vs"))
       .orderBy("g").collect()
@@ -29,7 +25,6 @@ class VectorAggSpec extends SparkSpec {
   }
 
   test("centroids from vectorSum match the exact explode-based path") {
-    assert(registered)
     val e = Tables.load(spark, Sf0001, "embeddings")
     val fast = e.groupBy(col("label"))
       .agg(VectorAgg.vectorSum(col("embedding")).as("vs"), count(lit(1)).as("n"))

@@ -6,10 +6,7 @@ import graft.ops.VectorOps
 class VectorOpsSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val registered = { VectorOps.ensureRegistered(spark); true }
-
   test("dot product: codegen expression equals higher-order-function form") {
-    assert(registered)
     val df = Seq(
       (Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)),
       (Array(0.0f, 0.0f, 0.0f), Array(1.0f, 1.0f, 1.0f)),
@@ -23,19 +20,16 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("dot handles double arrays and mixed types") {
-    assert(registered)
     val df = Seq((Array(1.0, 2.0), Array(3.0f, 4.0f))).toDF("a", "b")
     assert(df.select(VectorOps.dot(col("a"), col("b"))).head.getDouble(0) == 11.0)
   }
 
   test("dot is null-safe") {
-    assert(registered)
     val df = Seq((Some(Array(1.0f)), Option.empty[Array[Float]])).toDF("a", "b")
     assert(df.select(VectorOps.dot(col("a"), col("b"))).head.isNullAt(0))
   }
 
   test("l2norm and cosine on known vectors") {
-    assert(registered)
     val df = Seq((Array(3.0f, 4.0f), Array(4.0f, 3.0f))).toDF("a", "b")
     val r = df.select(
       VectorOps.l2norm(col("a")).as("n"),
@@ -45,7 +39,6 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("cosine(v, v) == 1 for normalized v; zero vector -> 0") {
-    assert(registered)
     val df = Seq((Array(0.6f, 0.8f), Array(0.0f, 0.0f))).toDF("v", "z")
     val r = df.select(
       VectorOps.cosine(col("v"), col("v")).as("self"),
@@ -55,7 +48,6 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("l2normalize produces unit vectors") {
-    assert(registered)
     val df = Seq(Tuple1(Array(3.0f, 4.0f))).toDF("v")
     val out = df.select(VectorOps.l2normalize(col("v")).as("u"))
       .select(VectorOps.l2norm(col("u"))).head.getDouble(0)
@@ -63,7 +55,6 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("topK returns k best with deterministic tiebreak") {
-    assert(registered)
     val corpus = Seq(
       (1L, Array(1.0f, 0.0f)), (2L, Array(0.9f, 0.1f)),
       (3L, Array(0.0f, 1.0f)), (4L, Array(1.0f, 0.0f))
