@@ -1,7 +1,9 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
+import graft.sources.Sources
 
 /** Deterministic replacement for the reference's LLM agent loop
   * (SURVEY.md §3.1, agent.py:127-228). The LLM chose tools from a
@@ -49,6 +51,12 @@ object Agent {
   /** Run one question. `queryVec` stands in for the external encoder
     * (the engine contract is "a vector column", SURVEY.md §2.9 V1).
     *
+    * Like the reference's `_prefetch_chunks`, the cited rows are
+    * fetched once: the search's top 5 are collected — for a plain
+    * question the run's only Spark job — and the answer, the returned
+    * `citations` (a driver-local DataFrame, never cached) and both
+    * sink records are built from them.
+    *
     * When `historyDir` is set, every run appends — exactly like the
     * reference backend does per query (backend/app.py:42-71 +
     * sql/01_create_schema.sql:97-108) —
@@ -61,6 +69,7 @@ object Agent {
           queryVec: org.apache.spark.sql.Column, topK: Int = 5,
           historyDir: Option[String] = None): AgentResult = {
     val t0 = System.nanoTime()
+    val spark = corpus.chunksV.sparkSession
     var tools = Vector.empty[String]
 
     val graphHits: Option[DataFrame] =
@@ -72,19 +81,18 @@ object Agent {
     // KG-only queries trigger a compensating vector search
     // (agent.py:185-188); plain queries search directly.
     tools :+= "search_papers"
-    val hits = Tools.searchPapers(corpus.chunksV, queryVec, topK)
-
-    val citations = hits.limit(5).cache()
-    val nCitations = citations.count()
+    val hits = Tools.searchPapers(corpus.chunksV, queryVec, topK).limit(5)
+    val rows = hits.collect()
+    val citations = spark.createDataFrame(java.util.Arrays.asList(rows: _*), hits.schema)
 
     // force-invoked, appended to tools_used only when absent
     // (agent.py:204-211) — with this planner that is always
     if (!tools.contains("summarize_context")) tools :+= "summarize_context"
     val answer =
-      if (nCitations == 0)
+      if (rows.isEmpty)
         "I'm sorry, I could not find relevant context to answer that."
       else
-        Tools.summarizeContext(citations).head().getString(0)
+        Tools.summarize(rows.toSeq)
 
     // materialize graph hits (if any) so the tool actually executed
     graphHits.foreach(_.count())
@@ -97,23 +105,34 @@ object Agent {
       s"planner exceeded MAX_ITERATIONS=$MaxIterations: $tools")
     val result = AgentResult(answer, citations, tools, steps = tools.size, latencyMs = latencyMs)
 
-    historyDir.foreach { dir =>
-      val spark = corpus.chunksV.sparkSession
-      graft.sources.Sources.appendJsonl(historyRecord(spark, question, result), s"$dir/history")
-      graft.sources.Sources.appendJsonl(evalMetricsRow(spark, question, result), s"$dir/eval_metrics")
-    }
+    historyDir.foreach(dir => appendSinks(spark, dir, sinkLines(spark, question, result)))
     result
   }
 
+  /** A finished run's history and eval_metrics records as JSON lines,
+    * keyed by their sink directory's name. */
+  private[query] def sinkLines(spark: SparkSession, question: String,
+                               result: AgentResult): Seq[(String, Seq[String])] =
+    Seq("history" -> historyRecord(spark, question, result),
+      "eval_metrics" -> evalMetricsRow(spark, question, result))
+      .map { case (sink, df) => sink -> Sources.jsonLines(df) }
+
+  /** Append [[sinkLines]] under `dir`, one new file per sink. */
+  private[query] def appendSinks(spark: SparkSession, dir: String,
+                                 lines: Seq[(String, Seq[String])]): Unit =
+    lines.foreach { case (sink, ls) => Sources.appendJsonLines(spark, ls, s"$dir/$sink") }
+
   /** The reference's history entry (backend/app.py:51-56): timestamp
     * (ISO-8601), query, answer, and the citation chunk metadata as an
-    * array of structs ordered by score descending.
+    * array of structs in citation order (score descending). Built on
+    * the driver from the citation rows: a driver-local DataFrame.
     */
   def historyRecord(spark: SparkSession, question: String,
                     result: AgentResult): DataFrame = {
-    result.citations
-      .agg(reverse(array_sort(collect_list(struct(
-        col("score"), col("chunk_id"), col("paper_id"), col("title"))))).as("chunks"))
+    val chunks = result.citations.select("score", "chunk_id", "paper_id", "title")
+    spark.createDataFrame(
+        java.util.List.of(Row(chunks.collect().toSeq)),
+        StructType(Seq(StructField("chunks", ArrayType(chunks.schema)))))
       .withColumn("timestamp",
         date_format(current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"))
       .withColumn("query", lit(question))
@@ -122,15 +141,14 @@ object Agent {
   }
 
   /** Append-only eval-metrics row for a finished run
-    * (APP.EVAL_METRICS shape, sql/01_create_schema.sql:97-108). */
+    * (APP.EVAL_METRICS shape, sql/01_create_schema.sql:97-108),
+    * confidence = top citation score. A driver-local DataFrame. */
   def evalMetricsRow(spark: SparkSession, question: String,
                      result: AgentResult, retrievalMode: String = "agentic"): DataFrame = {
     import spark.implicits._
-    val confidence = result.citations
-      .agg(max(col("score"))).head() match {
-        case r if r.isNullAt(0) => 0.0
-        case r => r.getDouble(0)
-      }
+    val confidence = result.citations.select("score").collect()
+      .collect { case r if !r.isNullAt(0) => r.getDouble(0) }
+      .maxOption.getOrElse(0.0)
     Seq((question, result.answer, result.toolsUsed.mkString(","), retrievalMode,
       confidence, result.latencyMs))
       .toDF("question", "generated_response", "context_used", "retrieval_mode",

@@ -25,10 +25,13 @@ import org.apache.spark.sql.Column
   *    docs/AGENT_ARCHITECTURE_ANALYSIS.md:52.)
   *
   * Scale note: the server holds only a [[Agent.Corpus]] of DataFrames
-  * — every request plans a Spark query against the (cached) corpus,
-  * so the same handler works unchanged whether the session is
-  * local[32] or a 1000-executor cluster; no driver-side corpus copy
-  * beyond what `chunksV.cache()` already pins.
+  * — every request runs one search job against the (cached) corpus
+  * (plus the graph tool's jobs for a graph-cue question), so the same
+  * handler works unchanged whether the session is local[32] or a
+  * 1000-executor cluster. The driver holds at most 5 citation rows
+  * per in-flight request; the response and sink lines are serialized
+  * from those rows with no further Spark job, and no driver-side
+  * corpus copy exists beyond the corpus cache its builder pinned.
   */
 object Server {
 
@@ -52,12 +55,11 @@ object Server {
   def start(corpus: Agent.Corpus, queryVec: Column, port: Int = 0,
             historyDir: Option[String] = None): Handle = {
     val server = HttpServer.create(new InetSocketAddress(port), 0)
-    // Serializes MUTATIONS of the history sinks only: concurrent
-    // Spark appends to one directory share a _temporary staging dir
-    // (one job's commit cleanup breaks the other's tasks), and /reset
-    // must not delete under an in-flight append. Query COMPUTE stays
-    // concurrent — Agent.run executes outside the lock with no sink,
-    // only the append/delete critical sections take it.
+    // Orders sink appends against /reset, so /reset never deletes a
+    // directory under an in-flight append. Appends need no mutual
+    // exclusion (each writes its own uniquely named file), and the
+    // lock covers only the file writes: Agent.run and the JSON
+    // serialization of the sink lines happen outside it.
     val sinkLock = new Object
 
     server.createContext("/query", (ex: HttpExchange) => handle(ex) {
@@ -81,12 +83,8 @@ object Server {
               topK = topK, historyDir = None)
             historyDir.foreach { dir =>
               val spark = corpus.chunksV.sparkSession
-              sinkLock.synchronized {
-                graft.sources.Sources.appendJsonl(
-                  Agent.historyRecord(spark, qNode.asText, res), s"$dir/history")
-                graft.sources.Sources.appendJsonl(
-                  Agent.evalMetricsRow(spark, qNode.asText, res), s"$dir/eval_metrics")
-              }
+              val lines = Agent.sinkLines(spark, qNode.asText, res)
+              sinkLock.synchronized(Agent.appendSinks(spark, dir, lines))
             }
             (200, queryResponse(res))
           }
@@ -199,12 +197,13 @@ object Server {
 
   /** backend/app.py:100-110's response shape. Citations carry the
     * search projection (chunk/paper ids, title, section, text,
-    * score — tools.py:79-86) straight from the result DataFrame. */
+    * score — tools.py:79-86) straight from the result's driver-local
+    * citation rows. */
   private def queryResponse(res: Agent.AgentResult): ObjectNode = {
     val node = mapper.createObjectNode()
     node.put("answer", res.answer)
     val cits: ArrayNode = node.putArray("citations")
-    res.citations.toJSON.collect().foreach(s => cits.add(mapper.readTree(s)))
+    graft.sources.Sources.jsonLines(res.citations).foreach(s => cits.add(mapper.readTree(s)))
     val confidence = {
       var best = 0.0
       val it = cits.elements()

@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.ops.{Entities, TextFns, VectorOps}
 
@@ -106,20 +106,24 @@ object Tools {
 
   /** summarize_context (tools.py:239-258): the LLM call is external;
     * the deterministic engine work is the context assembly — exactly
-    * the reference's `[i] Title | Section\ntext` block format.
+    * the reference's `[i] Title | Section\ntext` block format, blocks
+    * in (score desc, chunk_id) order joined by blank lines. Citations
+    * are at most a handful of rows, so this runs on the driver over
+    * rows the caller already collected.
     */
+  def summarize(chunks: Seq[Row]): String =
+    chunks.sortBy(r => (r.isNullAt(r.fieldIndex("score")),
+        -r.getAs[Double]("score"), r.getAs[String]("chunk_id")))
+      .zipWithIndex.map { case (r, i) =>
+        s"[${i + 1}] ${r.getAs[String]("title")} | ${r.getAs[String]("section_name")}\n" +
+          r.getAs[String]("text_content")
+      }.mkString("\n\n")
+
+  /** [[summarize]] as a tool over a citation DataFrame: one `context`
+    * row. */
   def summarizeContext(chunks: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("score").desc, col("chunk_id"))
-    chunks
-      .withColumn("i", row_number().over(w))
-      .withColumn("block",
-        format_string("[%d] %s | %s\n%s", col("i"), col("title"),
-          col("section_name"), col("text_content")))
-      // collect_list order isn't guaranteed across partitions; sort the
-      // (i, block) structs after collection for a deterministic context.
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("i"), col("block")))),
-          x => x.getField("block")), "\n\n").as("context"))
+    val spark = chunks.sparkSession
+    import spark.implicits._
+    Seq(summarize(chunks.collect().toSeq)).toDF("context")
   }
 }

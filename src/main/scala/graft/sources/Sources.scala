@@ -15,9 +15,6 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   def readCsv(spark: SparkSession, path: String, schema: StructType,
               header: Boolean = true): DataFrame =
     spark.read.schema(schema)
@@ -43,6 +40,35 @@ object Sources {
   /** S7 — append-only JSON-lines log (one file set per append). */
   def appendJsonl(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Append).json(path)
+
+  /** `df`'s rows as JSON lines from Spark's own JSON generator, so
+    * field names, omitted null fields and the timestamp format match
+    * what [[appendJsonl]] writes. Over a driver-local DataFrame the
+    * optimizer folds the projection into the local relation: no Spark
+    * job runs. */
+  def jsonLines(df: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.functions.{col, struct, to_json}
+    df.select(to_json(struct(col("*")))).collect().map(_.getString(0)).toSeq
+  }
+
+  /** Driver-side append of a few JSON lines to the log at `path`, the
+    * small-record twin of [[appendJsonl]]: each call adds one
+    * `part-<uuid>.json`, written under a hidden temp name (which
+    * `spark.read.json` skips) and renamed into place. Readers never see
+    * a partial file and concurrent appends never share a name. */
+  def appendJsonLines(spark: SparkSession, lines: Seq[String], path: String): Unit = {
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val name = s"part-${java.util.UUID.randomUUID()}.json"
+    val tmp = new org.apache.hadoop.fs.Path(dir, s".$name.tmp")
+    try {
+      val out = fs.create(tmp, false)
+      try out.write(lines.map(_ + "\n").mkString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+      if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(dir, name)))
+        throw new java.io.IOException(s"could not publish $name under $path")
+    } catch { case e: Throwable => fs.delete(tmp, false); throw e }
+  }
 
   /** Write a table bucketed+sorted on a join key. Joining two tables
     * bucketed the same way needs NO shuffle on either side — the

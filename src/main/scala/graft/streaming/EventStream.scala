@@ -49,17 +49,6 @@ object EventStream {
   def readStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(eventSchema).parquet(dir)
 
-  /** S7 — append-only JSON log sink (reference backend/app.py:42-71):
-    * every micro-batch appended as JSON lines.
-    */
-  def appendJsonSink(agg: DataFrame, outDir: String, checkpoint: String): DataStreamWriter[Row] =
-    agg.writeStream
-      .outputMode(OutputMode.Append)
-      .format("json")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-
   /** Streaming EXACT DEDUP — the streaming twin of the batch d1
     * operator: drop every re-delivery of an event id while keeping
     * dedup state bounded by the watermark
@@ -410,36 +399,6 @@ object EventStream {
       checkUniqueSource = false)
     Snapshots.commitEpoch(merged, stateDir, epochId)
   }
-
-  def mergeSink(stream: DataFrame, stateDir: String, key: String,
-                seqCol: String,
-                matchedDelete: (Column, Column) => Column,
-                notMatchedInsert: Column => Column,
-                checkpoint: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        mergeFold(batch, stateDir, key, seqCol,
-          matchedDelete, notMatchedInsert, epochId); ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-
-  /** STREAMING MV MAINTENANCE — x70's twin: each micro-batch is a
-    * fact delta whose partials fold into the registered materialized
-    * view through the same full-outer monoid merge the batch-side
-    * refresh runs ([[graft.plans.MatView.refreshEpoch]]), committed
-    * epoch-tagged so replays fold nothing. Folds compose to the
-    * one-shot refresh of the global delta because every stored
-    * column is a commutative monoid (StreamingSpec pins it). */
-  def mvRefreshSink(stream: DataFrame, mvName: String,
-                    checkpoint: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        graft.plans.MatView.refreshEpoch(
-          batch.sparkSession, mvName, batch, epochId); ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
 
   /** EXACTLY-ONCE MULTI-TABLE STREAMING SINK — x45's transaction run
     * per micro-batch: each epoch appends the batch's documents AND

@@ -1,6 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.query.{Agent, Tools}
 import graft.queries.KgQ
 import graft.pipeline.Ingest
@@ -77,6 +80,39 @@ class AgentSpec extends SparkSpec {
     assert(Seq("log_id", "question", "generated_response", "context_used",
       "retrieval_mode", "confidence", "latency_ms", "timestamp")
       .forall(m.columns.contains))
+  }
+
+  test("citations are driver-local rows: never cached, no cache growth across runs") {
+    // the corpus caches build on first use; measure after a warm run
+    Agent.run(corpus, "what is a spark query", queryVec)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+    val runs = (1 to 3).map(k => Agent.run(corpus, "what is a spark query", queryVec, topK = k))
+    assert(runs.forall(_.citations.storageLevel == StorageLevel.NONE))
+    assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore)
+    assert(runs.map(_.citations.count()) == Seq(1L, 2L, 3L))
+    val src = java.nio.file.Paths.get("src/main/scala/graft/query")
+    val files = java.nio.file.Files.list(src).iterator().asScala.toSeq
+    assert(files.nonEmpty)
+    for (f <- files) {
+      val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      assert(!text.contains(".cache()") && !text.contains(".persist("),
+        s"${f.getFileName} caches a DataFrame on the served path")
+    }
+  }
+
+  test("history chunks follow the citation order, ties included") {
+    // three chunks with the query vector itself as embedding: equal
+    // scores, so the response orders them by chunk_id ascending
+    val tied = corpus.chunksV.orderBy("chunk_id").limit(3)
+      .withColumn("embedding", queryVec)
+    val dir = java.nio.file.Files.createTempDirectory("graft_hist_ties").toString
+    val res = Agent.run(corpus.copy(chunksV = tied), "what is a spark query", queryVec,
+      historyDir = Some(dir))
+    val cited = res.citations.select("chunk_id").as[String](Encoders.STRING).collect().toSeq
+    assert(cited.size == 3 && cited == cited.sorted)
+    assert(res.citations.select("score").distinct().count() == 1)
+    val hist = spark.read.json(s"$dir/history").select(col("chunks.chunk_id")).head
+    assert(hist.getSeq[String](0) == cited)
   }
 
   test("callTool dispatches by name with argument-name tolerance") {

@@ -4,9 +4,10 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.pipeline.Ingest
-import graft.query.{Agent, Server}
+import graft.query.{Agent, Server, Tools}
 
 /** End-to-end HTTP surface: a real com.sun.net.httpserver instance on
   * an ephemeral port, driven with the JDK HTTP client — request JSON
@@ -130,25 +131,91 @@ class ServerSpec extends SparkSpec {
     }
   }
 
-  test("concurrent /query requests both land their history rows") {
-    // the sink lock serializes appends to the shared directory
-    // (concurrent Spark appends share _temporary staging); compute
-    // stays concurrent, but neither request's record may be lost
+  test("concurrent /query requests all land their history and eval_metrics rows") {
+    // each append writes its own file, renamed into place; compute and
+    // appends stay concurrent, but no request's record may be lost or
+    // torn, and no temp file may be left behind
     val dir = java.nio.file.Files.createTempDirectory("graft_srv_conc").toString
+    val questions = (1 to 8).map(i => s"question number $i")
     withServer(historyDir = Some(dir)) { port =>
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration._
       import scala.concurrent.ExecutionContext.Implicits.global
-      val posts = Seq("first question", "second question").map(q => Future {
+      val posts = questions.map(q => Future {
         post(port, "/query", s"""{"question": "$q"}""").statusCode()
       })
       assert(Await.result(Future.sequence(posts), 120.seconds).forall(_ == 200))
       val history = spark.read.json(s"$dir/history")
-      assert(history.count() == 2)
+      assert(history.count() == 8)
       assert(history.select("query").collect().map(_.getString(0)).toSet ==
-        Set("first question", "second question"))
-      assert(spark.read.json(s"$dir/eval_metrics").count() == 2)
+        questions.toSet)
+      // read under the full APP.EVAL_METRICS schema: a torn or
+      // interleaved line would surface as nulls in always-set columns
+      val evalSchema = Agent.evalMetricsRow(spark, "q",
+        Agent.AgentResult("a", spark.emptyDataFrame.withColumn("score", lit(0.0)),
+          Nil, 0, 0L)).schema
+      assert(evalSchema.size == 10)
+      val evals = spark.read.schema(evalSchema).json(s"$dir/eval_metrics").collect()
+      assert(evals.length == 8)
+      val alwaysSet = evalSchema.fieldNames.filterNot(_.endsWith("_score"))
+      assert(alwaysSet.length == 8)
+      for (r <- evals; f <- alwaysSet)
+        assert(!r.isNullAt(r.fieldIndex(f)), s"eval_metrics row without $f: $r")
+      assert(evals.map(_.getAs[String]("question")).toSet == questions.toSet)
+      for (sink <- Seq("history", "eval_metrics")) {
+        val names = new java.io.File(dir, sink).list.toSeq
+        assert(names.count(n => n.startsWith("part-") && n.endsWith(".json")) == 8)
+        assert(!names.exists(_.contains(".tmp")), s"temp file left in $sink: $names")
+      }
     }
+  }
+
+  test("a plain /query runs one Spark job; a graph-cue one adds only the graph tool's") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_srv_jobs").toString
+    val plain = "what is a spark query"
+    val graph = "what is related to spark"
+    withServer(historyDir = Some(dir)) { port =>
+      def query(q: String): Unit =
+        assert(post(port, "/query", s"""{"question": "$q"}""").statusCode() == 200)
+      // the corpus caches build on first use; count warm requests only
+      query(plain); query(graph)
+      assert(jobsDuring(query(plain)) == 1,
+        "search only: citations, answer, response and sinks come from one collect")
+      val kgJobs = jobsDuring(
+        Tools.searchKnowledgeGraph(corpus.nodes, corpus.edges, graph, 5).count())
+      assert(kgJobs >= 1)
+      assert(jobsDuring(query(graph)) == kgJobs + 1)
+    }
+  }
+
+  /** Spark jobs started by `body`. Listener delivery is FIFO, so the
+    * jobs between a marked canary run before `body` and one run after
+    * it are exactly the jobs `body` started. */
+  private def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")); ()
+      }
+    }
+    def canary(mark: String): Unit = {
+      val sc = spark.sparkContext
+      sc.setJobDescription(mark)
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      val deadline = System.currentTimeMillis + 30000
+      while (!jobs.contains(mark) && System.currentTimeMillis < deadline) Thread.sleep(20)
+      assert(jobs.contains(mark), s"canary job '$mark' never arrived")
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      canary("jobsDuring:before")
+      body
+      canary("jobsDuring:after")
+      val seen = jobs.toArray(Array.empty[String]).toSeq
+      seen.dropWhile(_ != "jobsDuring:before").dropWhile(_ == "jobsDuring:before")
+        .takeWhile(_ != "jobsDuring:after").size
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   test("POST /reset clears the history sinks") {

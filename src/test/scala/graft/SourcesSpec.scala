@@ -30,6 +30,27 @@ class SourcesSpec extends SparkSpec {
     assert(back.filter(col("id") === 1).count() == 2)
   }
 
+  test("driver-side JSON lines match the Spark JSON writer and append atomically (S7)") {
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("src").toString
+    // a null field, a timestamp and an array of structs: what the sinks carry
+    val rec = df.withColumn("ts", lit(java.sql.Timestamp.valueOf("2024-01-02 03:04:05.678")))
+      .withColumn("xs", array(struct(col("id"), col("name"))))
+    Sources.appendJsonl(rec, s"$dir/spark")
+    val written = new java.io.File(s"$dir/spark").listFiles.toSeq
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
+      .flatMap(f => java.nio.file.Files.readAllLines(f.toPath).asScala)
+    val lines = Sources.jsonLines(rec)
+    assert(lines.length == 3 && lines.toSet == written.toSet)
+    Sources.appendJsonLines(spark, lines, s"$dir/log")
+    Sources.appendJsonLines(spark, lines.take(1), s"$dir/log")
+    val names = new java.io.File(s"$dir/log").list.toSeq
+    assert(names.count(n => n.startsWith("part-") && n.endsWith(".json")) == 2)
+    assert(!names.exists(_.contains(".tmp")), s"temp file left behind: $names")
+    val back = spark.read.schema(rec.schema).json(s"$dir/log")
+    assert(back.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 1L, 2L, 3L))
+  }
+
   test("malformed csv rows yield nulls under PERMISSIVE (P6)") {
     val dir = java.nio.file.Files.createTempDirectory("src").toString
     java.nio.file.Files.writeString(
