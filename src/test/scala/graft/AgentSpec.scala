@@ -51,6 +51,51 @@ class AgentSpec extends SparkSpec {
     assert(ws.zip(ws.tail).forall { case (a, b) => a >= b })
   }
 
+  /** The reference's 2-hop CO_OCCURS lookup (tools.py:160-214) in plain
+    * Scala over the collected tables: the query's entity names, seeds
+    * matched on name_normalized, edges followed in both directions,
+    * weights summed per (seed, neighbor), ordered by total_weight desc
+    * then seed, neighbor_id, first k. */
+  private def twoHop(question: String, k: Int): Seq[(String, String, Double)] = {
+    val names = question.trim.split("\\s+").toSeq
+      .map(_.replaceAll("^[^A-Za-z0-9]+|[^A-Za-z0-9]+$", ""))
+      .filter(_.length >= 3)
+      .map(_.toLowerCase.replaceAll("[^a-z0-9 ]", "").replaceAll("\\s+", " ").trim)
+      .filter(n => n.nonEmpty && !graft.ops.Entities.stopwords.contains(n))
+      .toSet
+    val seeds = corpus.nodes.select("node_id", "name_normalized").collect()
+      .collect { case r if names(r.getString(1)) => r.getString(0) -> r.getString(1) }
+    val edges = corpus.edges.select("source_node_id", "target_node_id", "weight").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
+    val hops = for {
+      (id, seed) <- seeds.toSeq
+      (src, tgt, w) <- edges.toSeq
+      neighbor <- (if (src == id) Seq(tgt) else Nil) ++ (if (tgt == id) Seq(src) else Nil)
+    } yield (seed, neighbor, w)
+    hops.groupMapReduce(h => (h._1, h._2))(_._3)(_ + _).toSeq
+      .map { case ((seed, neighbor), w) => (seed, neighbor, w) }
+      .sortBy { case (seed, neighbor, w) => (-w, seed, neighbor) }
+      .take(k)
+  }
+
+  test("searchKnowledgeGraph returns exactly the 2-hop rows of the collected graph") {
+    val seeded = Seq(
+      "How is SPARK related to Query, DATA?",
+      "...spark!! (spark) data-- 'query'",
+      "the and of is to an ML spark with data for are")
+    val unseeded = "relationship between zzzqqqzzz and xxyyzzxx"
+    for (q <- seeded :+ unseeded; k <- Seq(1, 5, 50)) {
+      val df = Tools.searchKnowledgeGraph(corpus.nodes, corpus.edges, q, k)
+      assert(df.schema.map(f => f.name -> f.dataType.simpleString) ==
+        Seq("seed" -> "string", "neighbor_id" -> "string", "total_weight" -> "double"))
+      val got = df.collect().toSeq
+        .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
+      val want = twoHop(q, k)
+      assert(got == want, s"question '$q', k = $k")
+      assert(want.nonEmpty == seeded.contains(q), s"question '$q' seeds nothing")
+    }
+  }
+
   test("agent run: summarize forced, citations capped at 5, metrics row valid") {
     val res = Agent.run(corpus, "what is a spark query", queryVec)
     assert(res.toolsUsed == Seq("search_papers", "summarize_context"))
