@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-session materialization cache for derived tables.

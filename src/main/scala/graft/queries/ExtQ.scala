@@ -1,9 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.Lineage.CutOps
 import graft.Tables
 import graft.functions.VectorAgg
 import graft.ops.VectorOps

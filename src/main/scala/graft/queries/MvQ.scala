@@ -1,10 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.ops.Lineage.CutOps
 import graft.util.Parity.multisetEqual
 import graft.queries.ExtQ._
 

@@ -1,10 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.ops.Lineage.CutOps
 import graft.queries.ExtQ._
 
 /** STATS→PLANNER FAMILY (x34–x62 statistics consumers + x79/x80

@@ -55,7 +55,9 @@ object Agent {
     * fetched once: the search's top 5 are collected — for a plain
     * question the run's only Spark job — and the answer, the returned
     * `citations` (a driver-local DataFrame, never cached) and both
-    * sink records are built from them.
+    * sink records are built from them. A graph-cue question adds one
+    * job: the graph tool's top-k over the corpus's adjacency, cached by
+    * the first graph-cue question ([[Ingest.pinnedAdjacency]]).
     *
     * When `historyDir` is set, every run appends — exactly like the
     * reference backend does per query (backend/app.py:42-71 +
@@ -72,11 +74,12 @@ object Agent {
     val spark = corpus.chunksV.sparkSession
     var tools = Vector.empty[String]
 
-    val graphHits: Option[DataFrame] =
-      if (isGraphQuery(question)) {
-        tools :+= "search_knowledge_graph"
-        Some(Tools.searchKnowledgeGraph(corpus.nodes, corpus.edges, question, topK))
-      } else None
+    if (isGraphQuery(question)) {
+      tools :+= "search_knowledge_graph"
+      // the reference hands these rows to the LLM; no deterministic
+      // step reads them, but the tool runs on every graph-cue request
+      Tools.searchKnowledgeGraph(corpus.nodes, corpus.edges, question, topK).collect()
+    }
 
     // KG-only queries trigger a compensating vector search
     // (agent.py:185-188); plain queries search directly.
@@ -93,9 +96,6 @@ object Agent {
         "I'm sorry, I could not find relevant context to answer that."
       else
         Tools.summarize(rows.toSeq)
-
-    // materialize graph hits (if any) so the tool actually executed
-    graphHits.foreach(_.count())
 
     val latencyMs = (System.nanoTime() - t0) / 1000000
     // steps ≡ tool invocations (one tool per planner step here; the

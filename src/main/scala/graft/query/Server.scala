@@ -26,7 +26,8 @@ import org.apache.spark.sql.Column
   *
   * Scale note: the server holds only a [[Agent.Corpus]] of DataFrames
   * — every request runs one search job against the (cached) corpus
-  * (plus the graph tool's jobs for a graph-cue question), so the same
+  * (plus, for a graph-cue question, one seed lookup over the corpus's
+  * adjacency, cached on the first such question), so the same
   * handler works unchanged whether the session is local[32] or a
   * 1000-executor cluster. The driver holds at most 5 citation rows
   * per in-flight request; the response and sink lines are serialized

@@ -1,8 +1,9 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Entities, TextFns, VectorOps}
+import graft.pipeline.Ingest
 
 /** The reference's tool registry re-expressed as engine functions
   * (SURVEY.md §2.12; tool_schemas.py:11-118). Each tool is a query
@@ -34,34 +35,35 @@ object Tools {
     * edges both directions (J2/J3), union (U1), rank by weight with a
     * LIMIT (T2 — the agent path applies the limit; the backend path's
     * unbounded variant is a documented reference divergence).
+    *
+    * The 2-hop work is done once per corpus: this is one filter on the
+    * query's seed names plus a top-k over the cached
+    * [[Ingest.pinnedAdjacency]]. It plans as TakeOrderedAndProject ←
+    * Filter ← InMemoryTableScan with the `IN` pushed into the scan:
+    * one job, no Exchange. Output: `seed`, `neighbor_id`,
+    * `total_weight`.
     */
   def searchKnowledgeGraph(nodes: DataFrame, edges: DataFrame,
                            queryText: String, topK: Int = 5): DataFrame = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    val qEnts = Seq(queryText).toDF("text")
-      .select(explode(TextFns.tokens(col("text"))).as("token"))
-      .select(Entities.stripEdges(col("token")).as("name"))
-      .filter(length(col("name")) >= 3)
-      .select(TextFns.normalizeEntity(col("name")).as("name_normalized"))
-      .filter(col("name_normalized") =!= "" &&
-        !col("name_normalized").isin(Entities.stopwords: _*))
-      .distinct()
-    val seeds = nodes.join(broadcast(qEnts), Seq("name_normalized"), "left_semi")
-      .select(col("node_id"), col("name_normalized"))
-    val fwd = broadcast(seeds)
-      .join(edges, col("node_id") === col("source_node_id"))
-      .select(col("name_normalized").as("seed"),
-        col("target_node_id").as("neighbor_id"), col("weight"))
-    val rev = broadcast(seeds)
-      .join(edges, col("node_id") === col("target_node_id"))
-      .select(col("name_normalized").as("seed"),
-        col("source_node_id").as("neighbor_id"), col("weight"))
-    fwd.union(rev)
-      .groupBy(col("seed"), col("neighbor_id"))
-      .agg(sum(col("weight")).as("total_weight"))
+    val adjacency = Ingest.pinnedAdjacency(nodes, edges)
+    adjacency.filter(col("seed").isin(queryEntities(adjacency.sparkSession, queryText): _*))
       .orderBy(col("total_weight").desc, col("seed"), col("neighbor_id"))
       .limit(topK)
+  }
+
+  /** The query's distinct entity names, as ingest normalizes them
+    * (whitespace tokens, edges stripped, ≥3 characters, normalized,
+    * stopwords dropped). A Project over a one-row local relation, so
+    * collecting it runs no Spark job. */
+  private def queryEntities(spark: SparkSession, queryText: String): Seq[String] = {
+    import spark.implicits._
+    val names = filter(
+      transform(
+        filter(transform(TextFns.tokens(col("text")), Entities.stripEdges(_)),
+          length(_) >= 3),
+        TextFns.normalizeEntity(_)),
+      n => n =!= "" && !n.isin(Entities.stopwords: _*))
+    Seq(queryText).toDF("text").select(array_distinct(names)).head().getSeq[String](0)
   }
 
   /** Tool names in the registry, in the reference's declaration order
@@ -82,11 +84,12 @@ object Tools {
                name: String, args: Map[String, String] = Map.empty,
                lastCitations: Option[DataFrame] = None): Either[String, DataFrame] = {
     def arg(keys: String*): Option[String] = keys.flatMap(args.get).headOption
-    // tolerant like the rest of the dispatch contract: a malformed
-    // top_k becomes an error record, never an exception
+    // tolerant like the rest of the dispatch contract: a malformed or
+    // non-positive top_k (the Server's 400 rule) becomes an error
+    // record, never an exception
     def topK: Either[String, Int] = arg("top_k", "k") match {
       case None => Right(5)
-      case Some(v) => v.toIntOption.toRight(s"invalid top_k: '$v'")
+      case Some(v) => v.toIntOption.filter(_ >= 1).toRight(s"invalid top_k: '$v'")
     }
     name match {
       case "search_papers" =>

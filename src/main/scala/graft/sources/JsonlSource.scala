@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util
 
-import scala.collection.mutable
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.Path

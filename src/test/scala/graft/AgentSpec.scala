@@ -173,6 +173,14 @@ class AgentSpec extends SparkSpec {
     val kg = Tools.callTool(corpus, queryVec, "search_knowledge_graph",
       Map("question" -> "how is spark related to data")).toOption.get
     assert(kg.count() > 0)
+    // a question with no entity name at all seeds nothing
+    assert(Tools.callTool(corpus, queryVec, "search_knowledge_graph",
+      Map("q" -> "is it ok?")).toOption.get.count() == 0)
+    // a non-positive top_k is an error record, like the Server's 400 —
+    // not a planner exception from limit(-3)
+    for (tool <- Seq("search_papers", "search_knowledge_graph"); v <- Seq("0", "-3"))
+      assert(Tools.callTool(corpus, queryVec, tool, Map("question" -> "spark", "top_k" -> v)) ==
+        Left(s"invalid top_k: '$v'"))
     // summarize falls back to prior citations (agent.py:85-86)
     val sum = Tools.callTool(corpus, queryVec, "summarize_context",
       lastCitations = Some(hits.limit(2)))
@@ -187,6 +195,13 @@ class AgentSpec extends SparkSpec {
     val res = Agent.run(corpus, "what is related to spark", queryVec)
     assert(res.toolsUsed ==
       Seq("search_knowledge_graph", "search_papers", "summarize_context"))
+    // the tool pinned one cached adjacency for the corpus, and pins it
+    // again after the cache dropped it
+    val adj = Ingest.pinnedAdjacency(corpus.nodes, corpus.edges)
+    assert(adj.storageLevel != StorageLevel.NONE)
+    adj.unpersist(blocking = true)
+    assert(Ingest.pinnedAdjacency(corpus.nodes, corpus.edges) eq adj)
+    assert(adj.storageLevel != StorageLevel.NONE)
   }
 
   test("loop accounting: steps == tools_used length, bounded by MAX_ITERATIONS (agent.py:32,142,219-228)") {

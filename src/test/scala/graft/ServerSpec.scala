@@ -5,6 +5,10 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.{HashJoin, ShuffledHashJoinExec}
 import org.apache.spark.sql.functions._
 import graft.pipeline.Ingest
 import graft.query.{Agent, Server, Tools}
@@ -177,14 +181,34 @@ class ServerSpec extends SparkSpec {
     withServer(historyDir = Some(dir)) { port =>
       def query(q: String): Unit =
         assert(post(port, "/query", s"""{"question": "$q"}""").statusCode() == 200)
-      // the corpus caches build on first use; count warm requests only
+      // the corpus caches and the graph adjacency build on first use;
+      // count warm requests only
       query(plain); query(graph)
       assert(jobsDuring(query(plain)) == 1,
         "search only: citations, answer, response and sinks come from one collect")
-      val kgJobs = jobsDuring(
-        Tools.searchKnowledgeGraph(corpus.nodes, corpus.edges, graph, 5).count())
-      assert(kgJobs >= 1)
-      assert(jobsDuring(query(graph)) == kgJobs + 1)
+      assert(jobsDuring(query(graph)) == 2,
+        "the citation collect plus one graph lookup over the pinned adjacency")
+      val kg = Tools.searchKnowledgeGraph(corpus.nodes, corpus.edges, graph, 5)
+      assert(jobsDuring(kg.collect()) == 1)
+      val plan = kg.queryExecution.executedPlan
+      val aqe = new AdaptiveSparkPlanHelper {}
+      assert(aqe.collect(plan) { case e: Exchange => e }.isEmpty, plan.toString)
+      val scans = aqe.collect(plan) { case s: InMemoryTableScanExec => s }
+      assert(scans.map(_.output.map(_.name)) ==
+        Seq(Seq("seed", "neighbor_id", "total_weight")), plan.toString)
+      // the cached copy is cut from its build plan: a lookup's plan (and
+      // what Spark keeps of it per request) holds no nested build plan
+      val cached = scans.head.relation.cachedPlan
+      assert(aqe.collect(cached) {
+        case p @ (_: Exchange | _: InMemoryTableScanExec) => p }.isEmpty, cached.toString)
+      // and it joins nodes by shuffle: a broadcast relation's driver
+      // copy would live as long as the cache
+      val nodeJoins = aqe.collect(Ingest.adjacency(corpus.nodes, corpus.edges)
+          .queryExecution.executedPlan) {
+        case j: HashJoin if j.leftKeys.exists(_.references.exists(_.name == "node_id")) => j
+      }
+      assert(nodeJoins.nonEmpty && nodeJoins.forall(_.isInstanceOf[ShuffledHashJoinExec]),
+        nodeJoins.mkString("\n"))
     }
   }
 
