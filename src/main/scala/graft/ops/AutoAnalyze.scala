@@ -127,10 +127,10 @@ object AutoAnalyze {
     locks.computeIfAbsent(key, _ => new Object).synchronized {
       import graft.sources.Snapshots
       val catDir = catalogDirFor(dir)
-      val stored = stats(spark, dir).map(_.version)
+      val stored = stats(dir).map(_.version)
       if (!dataChange && base.exists(stored.contains)) {
         // layout-only re-land: same logical rows — re-stamp freshness
-        writeSummary(spark, dir, Snapshots.read(spark, catDir), version)
+        writeSummary(dir, Snapshots.read(spark, catDir), version)
         return
       }
       val state = base match {
@@ -149,7 +149,7 @@ object AutoAnalyze {
           stateFrame(Snapshots.readResolved(spark, dir, Some(version)))
       }
       Snapshots.commit(state, catDir)
-      writeSummary(spark, dir, Snapshots.read(spark, catDir), version)
+      writeSummary(dir, Snapshots.read(spark, catDir), version)
     }
   }
 
@@ -160,7 +160,7 @@ object AutoAnalyze {
     * (or never profiled). */
   def afterPurge(spark: SparkSession, dir: String): Unit = {
     val key = norm(dir)
-    if (!registry.contains(key) || stats(spark, dir).isEmpty) return
+    if (!registry.contains(key) || stats(dir).isEmpty) return
     // NOT isolated like afterCommit: a purge's re-profile is part of
     // the erasure obligation (stale pre-purge min/max ARE the leak),
     // so a failure here must surface to the purge caller.
@@ -170,7 +170,7 @@ object AutoAnalyze {
       val state = stateFrame(Snapshots.readResolved(spark, dir))
       val catDir = catalogDirFor(dir)
       Snapshots.commit(state, catDir)
-      writeSummary(spark, dir, Snapshots.read(spark, catDir), latest)
+      writeSummary(dir, Snapshots.read(spark, catDir), latest)
       // erasure discipline (x76's Reland rule): PRIOR catalog versions
       // carry pre-purge min/max — order statistics of the purged rows
       // — so they are vacuumed, not merely superseded
@@ -233,7 +233,7 @@ object AutoAnalyze {
         col("min_num"), col("max_num"), col("sum_len"), col("sk"))
   }
 
-  private def writeSummary(spark: SparkSession, dir: String,
+  private def writeSummary(dir: String,
                            state: DataFrame, version: Int): Unit = {
     val rows = state
       .withColumn("ndv_est", hll_sketch_estimate(col("sk")))
@@ -268,7 +268,7 @@ object AutoAnalyze {
     * first hooked commit. NDV is the HLL estimate (rounded); no
     * top-1 share or histogram on this path (those stay manual-
     * ANALYZE depth). */
-  def stats(spark: SparkSession, dir: String): Option[Served] = {
+  def stats(dir: String): Option[Served] = {
     val p = summaryPath(dir)
     if (!java.nio.file.Files.exists(p)) return None
     // the write is atomic (temp + move), so a parse failure means a
@@ -303,14 +303,14 @@ object AutoAnalyze {
     * (delete/replace/restore) lands a later version and flips this
     * false: detected, never silently served. */
   def isFresh(spark: SparkSession, dir: String): Boolean =
-    stats(spark, dir).exists(s =>
+    stats(dir).exists(s =>
       graft.sources.Snapshots.versions(spark, dir).lastOption.contains(s.version))
 
   /** The served summary as a FRAME (x80's SQL binding): one row per
     * profiled column plus the catalog's freshness verdict — built
     * from the driver-side summary, zero data-sized jobs. */
   def frame(spark: SparkSession, dir: String): DataFrame = {
-    val s = stats(spark, dir).getOrElse(throw new IllegalArgumentException(
+    val s = stats(dir).getOrElse(throw new IllegalArgumentException(
       s"no auto-stats state under $dir — enable() + commit first"))
     val fresh = isFresh(spark, dir)
     import spark.implicits._

@@ -105,8 +105,4 @@ object DedupCluster {
     }
     labels
   }
-
-  /** Representatives to keep: one row per component. */
-  def representatives(clusterAssign: DataFrame): DataFrame =
-    clusterAssign.select(col("rep_id")).distinct()
 }

@@ -83,7 +83,6 @@ object Multimodal {
     * library plugs into).
     */
   def decode(figures: DataFrame): DataFrame = {
-    val spark = figures.sparkSession
     val enc = org.apache.spark.sql.Encoders.row(decodedSchema)
     figures
       .select("figure_id", "media_type", "payload")
@@ -252,36 +251,6 @@ object Multimodal {
           j += 1
         }
         Row(r.getString(0), w, h, bands(0), bands(1), bands(2), bands(3))
-      }
-    }(enc)
-  }
-
-  /** The real-codec twin of [[decode]]: same seam, same output
-    * schema, ImageIO doing the actual parsing — feature = the 8-bin
-    * histogram of DECODED gray samples (the fake path's histogram of
-    * raw payload bytes, now computed from real pixels). */
-  def decodeImage(figures: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(decodedSchema)
-    figures.select("figure_id", "media_type", "payload").mapPartitions { rows =>
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]]("payload")
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(payload))
-        val raster = img.getRaster
-        val hist = new Array[Float](8)
-        var y = 0
-        while (y < img.getHeight) {
-          var x = 0
-          while (x < img.getWidth) {
-            hist(raster.getSample(x, y, 0) >> 5) += 1f
-            x += 1
-          }
-          y += 1
-        }
-        val total = math.max(img.getWidth * img.getHeight, 1).toFloat
-        Row(r.getString(0), r.getString(1), payload.length,
-          img.getWidth, img.getHeight, raster.getNumBands,
-          hist.map(_ / total))
       }
     }(enc)
   }

@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   *    (key, salt), then aggregate the partials on (key). The first
   *    shuffle spreads a hot key over `shards` reducers; the second
   *    handles only #keys × shards rows.
-  *  - [[withDfCap]]: drop keys whose document frequency exceeds a
-  *    cap before a pairwise join (the DedupQ relative df-cap pattern).
+  *  - [[withRelativeDfCap]]: drop keys whose document frequency
+  *    exceeds a share of the corpus before a pairwise join (the
+  *    DedupQ relative df-cap pattern).
   *
   * AQE's skew-join splitting (`spark.sql.adaptive.skewJoin`) covers
   * sort-merge joins at runtime; these utilities cover aggregations
@@ -72,22 +73,11 @@ object Skew {
     p.join(b, Seq(key, "_salt"), joinType).drop("_salt")
   }
 
-  /** Keep only rows whose `key` appears in at most `maxDf` distinct
-    * `docCol` values — the pre-join hot-key cap.
-    */
-  def withDfCap(df: DataFrame, key: String, docCol: String, maxDf: Int): DataFrame = {
-    val keep = df.groupBy(col(key))
-      .agg(countDistinct(col(docCol)).as("_df"))
-      .filter(col("_df") <= maxDf)
-      .select(col(key))
-    df.join(keep, Seq(key), "left_semi")
-  }
-
-  /** [[withDfCap]] with the threshold RELATIVE to the corpus:
-    * keys in more than `frac` of all distinct `docCol` values are
-    * dropped. The right form at scale — an absolute cap tuned at one
-    * SF silently keeps everything (or nothing) at 100×; a fraction
-    * tracks the corpus. The total stays in-plan (broadcast scalar),
+  /** The pre-join hot-key cap, RELATIVE to the corpus: keys in more
+    * than `frac` of all distinct `docCol` values are dropped. The
+    * right form at scale — an absolute cap tuned at one SF silently
+    * keeps everything (or nothing) at 100×; a fraction tracks the
+    * corpus. The total stays in-plan (broadcast scalar),
     * no driver collect.
     */
   def withRelativeDfCap(df: DataFrame, key: String, docCol: String,

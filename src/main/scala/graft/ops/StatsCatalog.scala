@@ -121,7 +121,7 @@ object StatsCatalog {
     val hit = cache.get(key)
     if (hit != null && hit._1 == fp) hit._2
     else {
-      val loaded = readSummary(spark, sfDir, table, fp)
+      val loaded = readSummary(sfDir, table, fp)
         .getOrElse(analyze(spark, sfDir, table))
       cache.put(key, (fp, loaded))
       loaded
@@ -167,7 +167,7 @@ object StatsCatalog {
   private def summaryPath(sfDir: String, table: String): java.nio.file.Path =
     java.nio.file.Paths.get(dirFor(sfDir), table, "_stats_summary.json")
 
-  private def readSummary(spark: SparkSession, sfDir: String, table: String,
+  private def readSummary(sfDir: String, table: String,
                           fp: String): Option[Map[String, ColStats]] = {
     val path = summaryPath(sfDir, table)
     if (!java.nio.file.Files.exists(path)) None

@@ -6,7 +6,7 @@ import org.apache.spark.sql.graft.Bridge
 import graft.functions.{DotProduct, L2Norm}
 
 /** Vector operators (SURVEY.md §2.9 V2–V4): cosine scoring, L2
-  * normalization, top-k similarity search.
+  * norms, top-k similarity search.
   *
   * Two implementations of the dot product:
   *  - `dotHof` — pure built-in higher-order functions; portable, used
@@ -30,13 +30,6 @@ object VectorOps {
 
   /** L2 norm via the codegen'd expression. */
   def l2norm(a: Column): Column = Bridge.column(L2Norm(Bridge.expression(a)))
-
-  /** V4 — L2-normalize an array column (null-safe on zero vectors). */
-  def l2normalize(a: Column): Column = {
-    val n = l2norm(a)
-    when(n === 0.0, a.cast("array<double>"))
-      .otherwise(transform(a.cast("array<double>"), x => x / n))
-  }
 
   /** Cosine similarity of two arbitrary (not pre-normalized) vectors. */
   def cosine(a: Column, b: Column): Column = {

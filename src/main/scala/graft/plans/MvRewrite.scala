@@ -678,32 +678,6 @@ object MatView {
     v
   }
 
-  /** EPOCH-TAGGED refresh — the streaming twin's fold: same merged
-    * frame, committed via commitEpoch so a replayed micro-batch
-    * folds NOTHING (at-least-once delivery, exactly-once state —
-    * the x12/mergeFold discipline). The fold DISARMS auto-rewrite
-    * (coverage cleared): the stored view now includes stream rows
-    * the registered coverage doesn't name, so serving any coverage-
-    * matching read would over-count — the view keeps maintaining and
-    * serving EXPLICIT reads, and the batch-side refresh()/create()
-    * is what re-arms the rewrite with correct coverage. Returns None
-    * on a replay skip. */
-  def refreshEpoch(
-      spark: SparkSession,
-      name: String,
-      delta: DataFrame,
-      epochId: Long): Option[Int] = {
-    import graft.sources.Snapshots
-    val d = MvCatalog.get(name).getOrElse(
-      throw new IllegalArgumentException(s"no registered MV named $name"))
-    if (Snapshots.epochCommitted(spark, d.mvDir, epochId)) None
-    else {
-      val v = Snapshots.commitEpoch(mergedFrame(spark, d, delta), d.mvDir, epochId)
-      if (v.isDefined) MvCatalog.register(d.copy(coverage = Nil))
-      v
-    }
-  }
-
   /** x97 — SELF-MAINTENANCE FROM THE COMMIT LOG (CDC-driven IVM with
     * RETRACTION): fold every published fact version in
     * (sinceVersion, head] into the stored view, planned entirely

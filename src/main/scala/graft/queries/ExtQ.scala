@@ -383,9 +383,7 @@ object ExtQ {
     }),
 
 
-    // s2 — gap-based sessionization, batch form (streaming twin with
-    // flatMapGroupsWithState state+timeout lives in
-    // graft.streaming.Sessionize; parity covered by SessionizeSpec).
+    // s2 — gap-based sessionization (graft.streaming.Sessionize).
     "s2_sessionize" -> ((s, d) => {
       graft.streaming.Sessionize.sessionsBatch(
         Tables.load(s, d, "events"), gapSeconds = 900)

@@ -174,7 +174,7 @@ object KgQ {
     * cluster where the rank side is too big to broadcast AND the
     * cached layout can be written pre-sorted (Sort also hoisted).
     */
-  def prepRoundEdges(edges: DataFrame, key: String): DataFrame =
+  def prepRoundEdges(edges: DataFrame): DataFrame =
     edges.cutLineage(true)
 
   private def orderGraph(s: SparkSession, d: String): DataFrame =
@@ -509,7 +509,7 @@ object KgQ {
       val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
       // static across all rounds (loop-hoisted layout measured a loss
       // at sf0.1 — see prepRoundEdges; cut stays)
-      val ew = prepRoundEdges(edges.join(deg, "src"), "src")
+      val ew = prepRoundEdges(edges.join(deg, "src"))
       val nodes = deg.select(col("src").as("node")).cutLineage(true)
       val n = nodes.count()
       var ranks = nodes.withColumn("rank", lit(1.0 / n))
@@ -555,7 +555,7 @@ object KgQ {
         .union(ed.select(col("b").as("src"), col("a").as("dst")))
       val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
       // k11's static edge side (see prepRoundEdges)
-      val ew = prepRoundEdges(edges.join(deg, "src"), "src")
+      val ew = prepRoundEdges(edges.join(deg, "src"))
       val nodes = deg.select(col("src").as("node"),
           (col("src") < 1000000L && col("src") % PprSeedMod === 0).as("is_seed"))
         .cutLineage(true)
@@ -1369,7 +1369,7 @@ object KgQ {
 
     // df-cap before the per-chunk rank, rank by first occurrence
     // (unique within a chunk: each ord is one occurrence), C(cap,2)
-    // pair join — Skew.withDfCap + Ingest.edges(cap) term for term.
+    // pair join — Ingest.edges(cap) term for term.
     "k12_kg_edges_capped" ->
       s"""$ctePrefix,
          |dpcf AS (

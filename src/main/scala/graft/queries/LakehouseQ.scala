@@ -2227,7 +2227,7 @@ object LakehouseQ {
         col(Snapshots.PosFileCol), col(Snapshots.PosIdxCol))
       val images = matched.select(
         col("flag"), (col("qty") + 100L).as("qty"))
-      val (dv, v) = Snapshots.commitPositionUpdate(s, dir,
+      val (dv, v) = Snapshots.commitPositionUpdate(dir,
         positions, images, base = 2)
       val untouched = Snapshots.fileSignature(s, dir, 1) == sig1 &&
         Snapshots.fileSignature(s, dir, 2) == sig2
@@ -2286,7 +2286,7 @@ object LakehouseQ {
       // value-identical)
       val m1 = Snapshots.readResolvedPos(s, srcDir, Some(2))
         .filter(col("qty") <= 3).cache()
-      Snapshots.commitPositionUpdate(s, srcDir,
+      Snapshots.commitPositionUpdate(srcDir,
         m1.select(col(Snapshots.PosFileCol), col(Snapshots.PosIdxCol)),
         m1.select(col("flag"), (col("qty") + 100L).as("qty")), base = 2)
       m1.unpersist()
@@ -2299,7 +2299,7 @@ object LakehouseQ {
       // the same two-consumer reason as m1
       val m2 = Snapshots.readResolvedPos(s, srcDir, Some(5))
         .filter(col("qty") > 100L).cache()
-      Snapshots.commitPositionUpdate(s, srcDir,
+      Snapshots.commitPositionUpdate(srcDir,
         m2.select(col(Snapshots.PosFileCol), col(Snapshots.PosIdxCol)),
         m2.select(col("flag"), (col("qty") + 1000L).as("qty")), base = 5)
       m2.unpersist()

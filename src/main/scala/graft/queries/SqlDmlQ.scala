@@ -916,7 +916,7 @@ object SqlDmlQ {
       // across its two consumers (x118's move; value-identical)
       val m1 = Snapshots.readResolvedPos(s, dir, Some(2))
         .filter(col("qty") <= 3).cache()
-      Snapshots.commitPositionUpdate(s, dir,
+      Snapshots.commitPositionUpdate(dir,
         m1.select(col(Snapshots.PosFileCol), col(Snapshots.PosIdxCol)),
         m1.select(col("flag"), (col("qty") + 100L).as("qty")), base = 2)
       m1.unpersist()

@@ -167,7 +167,7 @@ object StatsQ {
       Snapshots.commitAppend(
         orders.filter(col("o_orderdate") >= cut0 && col("o_orderdate") < cut1)
           .drop("o_orderdate"), factDir, base = 1)
-      val served = AutoAnalyze.stats(s, factDir).getOrElse(
+      val served = AutoAnalyze.stats(factDir).getOrElse(
         throw new IllegalStateException("hooked commits must leave stats"))
       val fresh = AutoAnalyze.isFresh(s, factDir)
       // x37's decision over the auto-maintained stats — zero manual

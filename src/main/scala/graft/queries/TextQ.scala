@@ -146,12 +146,8 @@ object TextQ {
 
   /** t20's Gopher keep-flag battery as ONE definition over any
     * (doc_id, text) frame — the declared batch query wraps it with
-    * the deterministic ORDER BY, and the streaming quality gate
-    * (EventStream.scoreDocs) applies the SAME function per
-    * micro-batch, so the streaming twin can never drift from the
-    * oracle-checked batch semantics. Per-document scoring only —
-    * no cross-document state, which is exactly what makes the
-    * foreachBatch twin ≡ batch on the drained union. */
+    * the deterministic ORDER BY, and t27 samples from its keep flag.
+    * Per-document scoring only: no cross-document state. */
   private[graft] def gopherBattery(docsDf: DataFrame): DataFrame = {
     val w = TextFns.tokens(col("text"))
     docsDf
@@ -183,10 +179,9 @@ object TextQ {
   }
 
   /** t25's within-document repetition battery, factored the same way
-    * as [[gopherBattery]] (one definition for the batch query and
-    * the streaming twin). All per-doc aggregations are keyed by
-    * doc_id, so the result over a union of micro-batches equals the
-    * result over the whole input. */
+    * as [[gopherBattery]]. All per-doc aggregations are keyed by
+    * doc_id, so the result over a union of document batches equals
+    * the result over the whole input. */
   private[graft] def repetitionBattery(docsDf: DataFrame): DataFrame = {
     val base = docsDf
       .withColumn("w", transform(TextFns.tokens(col("text")), t => lower(t)))

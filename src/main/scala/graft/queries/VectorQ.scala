@@ -30,7 +30,6 @@ object VectorQ {
   val LshPlanes = 4
   val PqM = 4
   val PqK = 16
-  val PqIters = 3
 
   /** v9 exact-PQ training: total assignment passes (updates between
     * them) — mirrored pass for pass by the unrolled oracle CTEs. */
@@ -160,6 +159,22 @@ object VectorQ {
         Seq("ivf_centroids" -> b.centroids, "ivf_assigned" -> b.assigned))
       graft.ops.Ivf.Index(cents, assigned, "vec_id")
     }
+  }
+
+  /** v38/v39's layer hierarchy: layer 0 over the whole corpus, layer
+    * ℓ over the members of level ≥ ℓ, each Derived-shared per session
+    * (`nsw_edges`, `nsw_l{ℓ}_edges`). */
+  private def hnswLayers(s: SparkSession, d: String): Seq[DataFrame] = {
+    val idx = learnedIndex(s, d)
+    val e = emb(s, d)
+    def build(members: DataFrame, rounds: Int) = graft.ops.Nsw.build(members,
+      "vec_id", "embedding", idx.centroids, NswBlocks, NswM, rounds)
+    Derived.of(s, d, "nsw_edges")(build(e, NswRounds)) +:
+      (1 to NswMaxLevel).map { l =>
+        Derived.of(s, d, s"nsw_l${l}_edges")(build(
+          e.filter(graft.ops.Nsw.levelOf(col("vec_id"), NswMaxLevel) >= l),
+          NswUpperRounds))
+      }
   }
 
   /** Session-memoized PQ index (same pattern as [[learnedIndex]]):
@@ -1032,20 +1047,8 @@ object VectorQ {
     // layer populations are pinned so the assignment itself is
     // checked. NswSpec pins the touched-candidate bound.
     "v38_hnsw_descent" -> ((s, d) => {
-      val idx = learnedIndex(s, d)
+      val layers = hnswLayers(s, d)
       val e = emb(s, d)
-      val layer0 = Derived.of(s, d, "nsw_edges") {
-        graft.ops.Nsw.build(e, "vec_id", "embedding", idx.centroids,
-          NswBlocks, NswM, NswRounds)
-      }
-      val layers = layer0 +: (1 to NswMaxLevel).map { l =>
-        Derived.of(s, d, s"nsw_l${l}_edges") {
-          graft.ops.Nsw.build(
-            e.filter(graft.ops.Nsw.levelOf(col("vec_id"), NswMaxLevel) >= l),
-            "vec_id", "embedding", idx.centroids, NswBlocks, NswM,
-            NswUpperRounds)
-        }
-      }
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       // the in-session descent over the warm layers is Derived-shared
@@ -1088,20 +1091,8 @@ object VectorQ {
     // lose.
     "v39_hnsw_persisted" -> ((s, d) => {
       import graft.sources.Snapshots
-      val idx = learnedIndex(s, d)
+      val warmLayers = hnswLayers(s, d)
       val e = emb(s, d)
-      val layer0 = Derived.of(s, d, "nsw_edges") {
-        graft.ops.Nsw.build(e, "vec_id", "embedding", idx.centroids,
-          NswBlocks, NswM, NswRounds)
-      }
-      val warmLayers = layer0 +: (1 to NswMaxLevel).map { l =>
-        Derived.of(s, d, s"nsw_l${l}_edges") {
-          graft.ops.Nsw.build(
-            e.filter(graft.ops.Nsw.levelOf(col("vec_id"), NswMaxLevel) >= l),
-            "vec_id", "embedding", idx.centroids, NswBlocks, NswM,
-            NswUpperRounds)
-        }
-      }
       // ONE table, one atomic commit — no torn hierarchy
       val dir = freshSnapDir(s, d, "v39_adj")
       Snapshots.commit(

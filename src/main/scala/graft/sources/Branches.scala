@@ -109,15 +109,14 @@ object Branches {
     * ghost (vacuum ages it out) and raises — the caller replans
     * against the new head, the same discipline as a lost log claim. */
   def commitTo(df: DataFrame, dir: String, name: String,
-               partitionBy: Seq[String] = Nil,
-               epoch: Option[Long] = None): Int = {
+               partitionBy: Seq[String] = Nil): Int = {
     val spark = df.sparkSession
     val es = entries(spark, dir, name)
     require(es.nonEmpty, s"no ref '$name' under $dir")
     if (es.head._3)
       throw new RefConflictException(s"'$name' is a tag — tags are immutable")
     val (seq, base, _) = es.last
-    val v = Snapshots.stageAppend(df, dir, base, partitionBy, epoch)
+    val v = Snapshots.stageAppend(df, dir, base, partitionBy)
     val (fs, p) = fsOf(spark, dir, name)
     if (!Snapshots.tryCreateExclusive(fs, p, s"_ref_${seq + 1}.json",
         refJson(v, tag = false)))
@@ -176,20 +175,6 @@ object Branches {
           s"but the branch chain is ${chain.mkString(",")} — RESTORE " +
           s"TABLE '$dir' TO VERSION $fork and re-merge")
     chain
-  }
-
-  /** Whether any version ON THE REF CHAIN carries `epoch` — the
-    * streaming branch sink's replay test ([[graft.streaming
-    * .EventStream.branchFold]]). Scoped to the chain the ref names:
-    * a staged ghost that lost the CAS advance never joined the
-    * chain, so it can never suppress the retry that must land the
-    * epoch (the same discipline as the txn sink's visible-only
-    * check). */
-  def epochLanded(spark: SparkSession, dir: String, name: String,
-                  epochId: Long): Boolean = {
-    val chain = entries(spark, dir, name).drop(1).map(_._2).toSet
-    chain.nonEmpty && Snapshots.epochTags(spark, dir)
-      .exists { case (v, e) => e == epochId && chain(v) }
   }
 
   /** Drop a ref: delete its files. A dropped branch's unmerged

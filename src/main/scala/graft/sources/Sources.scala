@@ -4,38 +4,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Source/sink surface beyond the fixture parquet (SURVEY.md §2.1):
-  * schema-enforced readers and append/overwrite writers for the
-  * formats the reference touches — parquet (stage checkpoints,
-  * data/config.py:13-17), JSON (the append-only history log,
-  * backend/app.py:42-71), CSV (generic tabular interchange).
-  *
-  * Readers take an explicit schema — at 100 TB, schema inference is
-  * a full extra pass over the data; explicit schemas also pin
-  * nullability so downstream plans don't change shape between runs.
+  * the append-only JSON-lines history log (backend/app.py:42-71),
+  * bucketed tables, and range-sharded parquet with a manifest that
+  * range reads prune on.
   */
 object Sources {
-
-  def readCsv(spark: SparkSession, path: String, schema: StructType,
-              header: Boolean = true): DataFrame =
-    spark.read.schema(schema)
-      .option("header", header.toString)
-      .option("mode", "PERMISSIVE") // malformed rows → nulls (P6 semantics)
-      .csv(path)
-
-  def readJsonl(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema)
-      .option("mode", "PERMISSIVE")
-      .json(path)
-
-  def writeParquet(df: DataFrame, path: String,
-                   mode: SaveMode = SaveMode.Overwrite,
-                   partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode(mode)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-  }
-
-  def writeCsv(df: DataFrame, path: String, mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).option("header", "true").csv(path)
 
   /** S7 — append-only JSON-lines log (one file set per append). */
   def appendJsonl(df: DataFrame, path: String): Unit =
@@ -170,27 +143,6 @@ object Sources {
     stats.length
   }
 
-  /** Small-files compaction — the table-maintenance operator every
-    * long-running ingest needs: streaming/micro-batch sinks and
-    * per-stage checkpoints accumulate thousands of KB-sized files,
-    * and at 100 TB the resulting task-per-file scheduling + NameNode
-    * pressure dominate scan cost. Rewrites `inDir` to `outDir` as
-    * ⌈totalBytes / targetBytes⌉ files via `coalesce` (no shuffle —
-    * partition merge only; use `repartition` instead when output
-    * skew matters more than the shuffle). Returns the output file
-    * count.
-    */
-  def compactParquet(spark: SparkSession, inDir: String, outDir: String,
-                     targetBytes: Long = 128L * 1024 * 1024): Int = {
-    val path = new org.apache.hadoop.fs.Path(inDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val totalBytes = listParquetFiles(fs, path).map(_.getLen).sum
-    val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    spark.read.parquet(inDir).coalesce(n)
-      .write.mode(SaveMode.Overwrite).parquet(outDir)
-    listParquetFiles(fs, new org.apache.hadoop.fs.Path(outDir)).length
-  }
-
   /** Manifest-pruned range read — the reader twin of [[writeShards]]
     * and the zone-map data-skipping move: because shards are range-
     * partitioned and the manifest records each file's inclusive
@@ -230,7 +182,7 @@ object Sources {
       }
     val files = manifest.get("files").elements()
     val (keep, total) = {
-      var kept = List.newBuilder[String]; var n = 0
+      val kept = List.newBuilder[String]; var n = 0
       while (files.hasNext) {
         val f = files.next(); n += 1
         val mn = f.get("min_key"); val mx = f.get("max_key")
@@ -749,7 +701,7 @@ object Snapshots {
     * [[ConcurrentCommitException]] the staged DV is left as an
     * invisible ghost (vacuum collects it, same as a crash) and the
     * caller re-plans positions against the new head. */
-  def commitPositionUpdate(spark: SparkSession, dir: String,
+  def commitPositionUpdate(dir: String,
                            positions: DataFrame, images: DataFrame,
                            base: Int): (Int, Int) = {
     val dv = commitPositionDeletes(positions, dir, base, staged = true)
@@ -830,16 +782,11 @@ object Snapshots {
     * WAP ghost until published); the maintenance hooks stay silent
     * because nothing reader-visible changed. */
   def stageAppend(df: DataFrame, dir: String, base: Int,
-                  partitionBy: Seq[String] = Nil,
-                  epoch: Option[Long] = None): Int = {
+                  partitionBy: Seq[String] = Nil): Int = {
     require(allVersions(df.sparkSession, dir).contains(base),
       s"append base v$base not committed under $dir")
-    // an epoch tag makes a branch-fed table's replay test possible
-    // ([[Branches.epochLanded]] — ref-chain-scoped, so a lost-CAS
-    // ghost can never suppress the retry that must land the epoch)
     writeVersion(df, dir, partitionBy,
-      extraMeta = s""","kind":"append","base":$base,"staged":true""" +
-        epoch.fold("")(e => s""","epoch":$e"""))
+      extraMeta = s""","kind":"append","base":$base,"staged":true""")
   }
 
   /** TABLE CHECK CONSTRAINT (x102, Delta's ALTER TABLE ADD
@@ -929,15 +876,6 @@ object Snapshots {
       }
     }.sortBy(_._1)
   }
-
-  /** Every (version → epoch) tag in ONE log read — [[Branches
-    * .epochLanded]]'s bulk accessor (a per-version lookup would
-    * re-read the log once per ref advance, degrading a long-running
-    * branch sink quadratically in its own commit count). */
-  def epochTags(spark: SparkSession, dir: String): Map[Int, Long] =
-    logEntries(spark, dir).flatMap(n =>
-      Option(n.get("epoch"))
-        .map(e => n.get("version").asInt() -> e.asLong())).toMap
 
   /** OCC APPEND WITH CONFLICT COMMUTATION (x91) — the Delta/Iceberg
     * conflict-matrix semantics the plain `expectedVersion` commit is
@@ -1097,7 +1035,7 @@ object Snapshots {
     * version otherwise. */
   private def requireCommutesDownTo(spark: SparkSession, dir: String,
                                     head: Int, base: Int,
-                                    myKind: String = "append",
+                                    myKind: String,
                                     myRange: Option[KeyRange] = None,
                                     myFiles: Option[Set[String]] = None): Unit = {
     val byV = logEntries(spark, dir)
@@ -1729,11 +1667,6 @@ object Snapshots {
     logEntries(spark, dir).filter(isPublishedEntry(spark, _))
       .flatMap(n => Option(n.get("ts")).map(_.asLong())).maxOption
 
-  /** Read the table as it stood at `tsMillis` ([[versionAsOf]] +
-    * pinned [[read]]). */
-  def readAsOf(spark: SparkSession, dir: String, tsMillis: Long): DataFrame =
-    read(spark, dir, Some(versionAsOf(spark, dir, tsMillis)))
-
   /** Publish a staged version: flip its log entry's `staged` flag off
     * (write-temp-then-rename over the ONE entry file — the same
     * crash-atomicity as commit, and no other version's entry is even
@@ -1794,28 +1727,6 @@ object Snapshots {
                partitionBy: Seq[String] = Nil): Int =
     writeVersion(df, dir, partitionBy,
       extraMeta = s""","staged":true,"txn":${jstr(txnId)},"txn_dir":${jstr(txnDir)}""")
-
-  /** [[txnStage]] carrying an EPOCH tag — the multi-table exactly-once
-    * streaming sink's stage: replay detection asks
-    * [[epochCommitted]], which counts only reader-visible versions,
-    * so the invisible ghosts of a crashed attempt can never suppress
-    * the retry that must land the epoch. (A table fed this way uses
-    * epoch tags through its txn sink exclusively — mixing with
-    * [[commitEpoch]]'s own tags on one table would let a ghost
-    * suppress a commitEpoch retry, which checks all entries.) */
-  def txnStageEpoch(df: DataFrame, dir: String, txnDir: String, txnId: String,
-                    epochId: Long): Int =
-    writeVersion(df, dir, Nil,
-      extraMeta = s""","staged":true,"txn":${jstr(txnId)},"txn_dir":${jstr(txnDir)},"epoch":$epochId""")
-
-  /** Whether a reader-VISIBLE version of `dir` carries `epoch` — the
-    * replay test for the multi-table epoch sink (crashed attempts'
-    * undecided ghosts do not count; the successfully committed epoch
-    * does, repaired or not). */
-  def epochCommitted(spark: SparkSession, dir: String, epochId: Long): Boolean =
-    logEntries(spark, dir).exists(n =>
-      Option(n.get("epoch")).exists(_.asLong() == epochId) &&
-        isPublishedEntry(spark, n))
 
   /** COMMIT the transaction: create its decision marker with status
     * `committed` — the one atomic action that makes every staged

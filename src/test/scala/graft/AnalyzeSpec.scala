@@ -309,7 +309,7 @@ class AnalyzeSpec extends SparkSpec {
     Snapshots.commit(
       Seq((1L, "x", 2.0), (2L, "y", 4.0), (3L, null.asInstanceOf[String], 6.0))
         .toDF("k", "s", "v"), dir)
-    val st = AutoAnalyze.stats(spark, dir).get
+    val st = AutoAnalyze.stats(dir).get
     assert(AutoAnalyze.isFresh(spark, dir), "hooked commit must leave stats fresh")
     assert(st.cols("k").nRows == 3 && st.cols("s").nNulls == 1)
     assert(st.cols("v").minNum.contains(2.0) && st.cols("v").maxNum.contains(6.0))
@@ -344,7 +344,7 @@ class AnalyzeSpec extends SparkSpec {
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .foreach(java.nio.file.Files.delete)
     Snapshots.commitAppend(Seq((3L, 30.0)).toDF("k", "v"), dir, base = 1)
-    val st = AutoAnalyze.stats(spark, dir).get
+    val st = AutoAnalyze.stats(dir).get
     assert(st.version == 2 && AutoAnalyze.isFresh(spark, dir))
     assert(st.cols("k").nRows == 3, "fold must be base-state + delta, not a rescan")
     assert(st.cols("v").minNum.contains(10.0) && st.cols("v").maxNum.contains(30.0))
@@ -363,7 +363,7 @@ class AnalyzeSpec extends SparkSpec {
     Snapshots.commitDeletes(Seq(Tuple1(1L)).toDF("k"), dir, base = 1)
     assert(!AutoAnalyze.isFresh(spark, dir),
       "a delete must flip the verdict stale — detected, never silently served")
-    assert(AutoAnalyze.stats(spark, dir).get.version == 1,
+    assert(AutoAnalyze.stats(dir).get.version == 1,
       "the stored state must still be the last sound profile")
     AutoAnalyze.dropState(spark, dir)
     // dataChange=false (OPTIMIZE re-land): same logical rows — the
@@ -373,7 +373,7 @@ class AnalyzeSpec extends SparkSpec {
     Snapshots.commit(Seq((1L, 10.0), (2L, 20.0)).toDF("k", "v"), dir2)
     Snapshots.commitAppend(Seq((1L, 10.0), (2L, 20.0)).toDF("k", "v"), dir2,
       base = 1, dataChange = false)
-    val st2 = AutoAnalyze.stats(spark, dir2).get
+    val st2 = AutoAnalyze.stats(dir2).get
     assert(st2.version == 2 && AutoAnalyze.isFresh(spark, dir2))
     assert(st2.cols("k").nRows == 2, "a layout re-land must not double-count")
     AutoAnalyze.dropState(spark, dir2)
@@ -386,14 +386,14 @@ class AnalyzeSpec extends SparkSpec {
     val dir = autoFixture("e")
     AutoAnalyze.enable(dir)
     Snapshots.commit(Seq((1L, 10.0)).toDF("k", "v"), dir)
-    val v1 = AutoAnalyze.stats(spark, dir).get
+    val v1 = AutoAnalyze.stats(dir).get
     val staged = Snapshots.commitStaged(Seq((2L, 20.0), (3L, 30.0)).toDF("k", "v"), dir)
-    assert(AutoAnalyze.stats(spark, dir).get == v1,
+    assert(AutoAnalyze.stats(dir).get == v1,
       "a reader-invisible staged write must not move the served stats")
     assert(AutoAnalyze.isFresh(spark, dir),
       "staged versions are invisible to latest — the verdict stays fresh")
     Snapshots.publish(spark, dir, staged)
-    val st = AutoAnalyze.stats(spark, dir).get
+    val st = AutoAnalyze.stats(dir).get
     assert(st.version == staged && AutoAnalyze.isFresh(spark, dir))
     assert(st.cols("k").nRows == 2, "publish must profile the published state")
     AutoAnalyze.dropState(spark, dir)
@@ -407,7 +407,7 @@ class AnalyzeSpec extends SparkSpec {
     AutoAnalyze.enable(dir)
     Snapshots.commit(Seq((1L, 10.0), (2L, 20.0), (7L, 70.0)).toDF("k", "v"), dir)
     Snapshots.purgeKeys(spark, dir, Seq(Tuple1(7L)).toDF("k"))
-    val st = AutoAnalyze.stats(spark, dir).get
+    val st = AutoAnalyze.stats(dir).get
     assert(AutoAnalyze.isFresh(spark, dir))
     assert(st.cols("k").nRows == 2 && st.cols("v").maxNum.contains(20.0),
       "post-purge stats must describe the purged state, not the pre-purge one")
@@ -433,7 +433,7 @@ class AnalyzeSpec extends SparkSpec {
     // delta only — folding onto v2's state would be wrong, so the
     // base mismatch must trigger the honest full re-profile
     Snapshots.commitAppend(Seq((3L, 30.0)).toDF("k", "v"), dir, base = 1)
-    val st = AutoAnalyze.stats(spark, dir).get
+    val st = AutoAnalyze.stats(dir).get
     assert(st.version == 3 && AutoAnalyze.isFresh(spark, dir))
     assert(st.cols("k").nRows == 2 && st.cols("v").maxNum.contains(30.0),
       "the sibling chain's stats are v1 ∪ delta2 — never a three-way fold")
@@ -451,7 +451,7 @@ class AnalyzeSpec extends SparkSpec {
     // the evolved nightly batch: column v dropped, column w added
     Snapshots.commitAppend(
       Seq((3L, "x"), (4L, "y"), (5L, "z")).toDF("k", "w"), dir, base = 1)
-    val st = AutoAnalyze.stats(spark, dir).get
+    val st = AutoAnalyze.stats(dir).get
     assert(st.cols.keySet == Set("k", "v", "w"))
     assert(st.cols.values.forall(_.nRows == 5),
       "n_rows is table-wide for every column, evolved or not")
@@ -470,13 +470,13 @@ class AnalyzeSpec extends SparkSpec {
     val dir = autoFixture("d")
     Snapshots.commit(Seq((1L, 10.0)).toDF("k", "v"), dir) // unhooked
     AutoAnalyze.enable(dir)
-    assert(AutoAnalyze.stats(spark, dir).isEmpty, "no state before the first hooked commit")
+    assert(AutoAnalyze.stats(dir).isEmpty, "no state before the first hooked commit")
     Snapshots.commitAppend(Seq((2L, 20.0)).toDF("k", "v"), dir, base = 1)
-    val st = AutoAnalyze.stats(spark, dir).get
+    val st = AutoAnalyze.stats(dir).get
     assert(st.version == 2 && st.cols("k").nRows == 2,
       "mid-history enable must profile the resolved state once")
     Snapshots.commitAppend(Seq((3L, 30.0)).toDF("k", "v"), dir, base = 2)
-    assert(AutoAnalyze.stats(spark, dir).get.cols("k").nRows == 3)
+    assert(AutoAnalyze.stats(dir).get.cols("k").nRows == 3)
     AutoAnalyze.dropState(spark, dir)
   }
 
@@ -494,7 +494,7 @@ class AnalyzeSpec extends SparkSpec {
       Seq(Tuple1(Array[Byte](1, 2, 3))).toDF("payload"), dir)
     assert(v == 1, "the data commit must land despite the hook failure")
     assert(Snapshots.versions(spark, dir) == Seq(1))
-    assert(AutoAnalyze.stats(spark, dir).isEmpty,
+    assert(AutoAnalyze.stats(dir).isEmpty,
       "a failed hook leaves no stats — detected (stale), never served")
     assert(!AutoAnalyze.isFresh(spark, dir))
     // a later profilable commit recovers: the hook is self-healing
@@ -517,11 +517,11 @@ class AnalyzeSpec extends SparkSpec {
     val dir = autoFixture("f")
     AutoAnalyze.enable(dir)
     Snapshots.commit(Seq((1L, 10.0)).toDF("k", "v"), dir)
-    assert(AutoAnalyze.stats(spark, dir).isDefined)
+    assert(AutoAnalyze.stats(dir).isDefined)
     val p = java.nio.file.Paths.get(
       AutoAnalyze.catalogDirFor(dir), "_auto_summary.json")
     java.nio.file.Files.writeString(p, "{\"fmt\":1,\"dir\":\"x") // torn
-    assert(AutoAnalyze.stats(spark, dir).isEmpty,
+    assert(AutoAnalyze.stats(dir).isEmpty,
       "an unparseable summary is 'no stats', never an exception")
     AutoAnalyze.dropState(spark, dir)
   }

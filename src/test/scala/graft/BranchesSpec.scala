@@ -95,21 +95,6 @@ class BranchesSpec extends SparkSpec {
     assert(Snapshots.readResolved(spark, dir).count() == 2)
   }
 
-  test("branchFold gates the streaming batch against registered constraints") {
-    val dir = freshDir()
-    Snapshots.commit(Seq((1L, 10.0)).toDF("id", "bal"), dir)
-    Snapshots.addCheckConstraint(spark, dir, "non_negative", "bal >= 0")
-    Branches.create(spark, dir, "stream", 1)
-    intercept[graft.sources.ConstraintViolationException] {
-      graft.streaming.EventStream.branchFold(
-        Seq((2L, -1.0)).toDF("id", "bal"), dir, "stream", epochId = 0L)
-    }
-    // the refused batch never even staged onto the branch
-    assert(Branches.head(spark, dir, "stream") == 1)
-    assert(graft.streaming.EventStream.branchFold(
-      Seq((2L, 1.0)).toDF("id", "bal"), dir, "stream", epochId = 1L).isDefined)
-  }
-
   test("duplicate ref creation raises; list and drop round-trip") {
     val dir = freshDir()
     Snapshots.commit(Seq((1L, "a")).toDF("id", "v"), dir)

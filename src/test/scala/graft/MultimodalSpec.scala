@@ -88,24 +88,6 @@ class MultimodalSpec extends SparkSpec {
     assert(hashed("fig_000007_a") != hashed("fig_012345_a"))
   }
 
-  test("m4 seam contract: the real-codec decode serves the fake path's exact schema") {
-    import spark.implicits._
-    val ids = Seq(3L).toDF("doc_id")
-    val real = Multimodal.decodeImage(Multimodal.pngFigures(ids, "a")
-      .withColumn("paper_id", lit("p")).withColumn("page_number", lit(1))
-      .withColumn("caption", lit("c"))
-      .select("figure_id", "paper_id", "page_number", "caption",
-        "payload", "media_type"))
-    val fake = Multimodal.decode(Multimodal.figuresFromDocuments(
-      Seq((3L, "some text payload")).toDF("doc_id", "text")))
-    // one seam, one output contract: a consumer swaps codecs freely
-    assert(real.schema == fake.schema)
-    val r = real.head()
-    assert(r.getInt(3) == Multimodal.PngW && r.getInt(4) == Multimodal.PngH)
-    assert(r.getSeq[Float](6).sum > 0.99f && r.getSeq[Float](6).sum < 1.01f,
-      "the decoded-pixel histogram must normalize like the fake path's")
-  }
-
   test("m5 real audio codec: the WAV container round-trips header and PCM samples exactly") {
     import spark.implicits._
     val figs = Multimodal.wavFigures(Seq(42L).toDF("doc_id"), "a")

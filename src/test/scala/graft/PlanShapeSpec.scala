@@ -553,7 +553,7 @@ class PlanShapeSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(l)
     try {
-      val st = AutoAnalyze.stats(spark, dir).get // summary file read
+      val st = AutoAnalyze.stats(dir).get // summary file read
       assert(st.cols("k").nRows == 2)
       assert(AutoAnalyze.isFresh(spark, dir)) // local log read
       AutoAnalyze.frame(spark, dir) // driver rows — no action taken

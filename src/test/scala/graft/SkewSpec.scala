@@ -45,12 +45,4 @@ class SkewSpec extends SparkSpec {
       Skew.saltedJoin(probe, build, "key", 8, "row_id", "full")
     }
   }
-
-  test("withDfCap drops keys above the document-frequency cap") {
-    val df = Seq(
-      ("common", 1L), ("common", 2L), ("common", 3L),
-      ("rare", 1L), ("rare", 2L)).toDF("key", "doc")
-    val out = Skew.withDfCap(df, "key", "doc", maxDf = 2)
-    assert(out.select("key").distinct().as[String].collect().toSeq == Seq("rare"))
-  }
 }

@@ -307,7 +307,8 @@ class SnapshotsSpec extends SparkSpec {
     assert(Snapshots.versionAsOf(spark, dir, 1000L) == 1)
     assert(Snapshots.versionAsOf(spark, dir, 1999L) == 1)
     assert(Snapshots.versionAsOf(spark, dir, 2000L) == 2)
-    assert(Snapshots.readAsOf(spark, dir, 1500L).collect()
+    assert(Snapshots.read(spark, dir,
+        Some(Snapshots.versionAsOf(spark, dir, 1500L))).collect()
       .map(_.getString(1)).toSeq == Seq("v1"))
     // a ts that predates the first commit has no state to read
     intercept[IllegalArgumentException] {
@@ -1078,7 +1079,7 @@ class SnapshotsSpec extends SparkSpec {
     // silently vanish — the lost-update anomaly. It must raise.
     Snapshots.commitAppend(Seq(("c", 3L)).toDF("k", "v"), dir, base = 1)
     intercept[graft.sources.ConcurrentCommitException] {
-      Snapshots.commitPositionUpdate(spark, dir, positions, images, base = 1)
+      Snapshots.commitPositionUpdate(dir, positions, images, base = 1)
     }
     assert(Snapshots.readResolved(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1))).sorted.toSeq ==
@@ -1092,7 +1093,7 @@ class SnapshotsSpec extends SparkSpec {
     // re-planned at the new head, both verbs land
     val head = Snapshots.versions(spark, dir).last
     val m2 = Snapshots.readResolvedPos(spark, dir).filter(col("k") === "a")
-    Snapshots.commitPositionUpdate(spark, dir,
+    Snapshots.commitPositionUpdate(dir,
       m2.select(col(Snapshots.PosFileCol), col(Snapshots.PosIdxCol)),
       m2.select(col("k"), lit(99L).as("v")), base = head)
     assert(Snapshots.readResolved(spark, dir).filter(col("k") === "a")
@@ -1122,7 +1123,7 @@ class SnapshotsSpec extends SparkSpec {
     // positional update of ONE of the two identical 'a' rows
     val m = Snapshots.readResolvedPos(spark, dir).filter(col("k") === "a")
       .orderBy(col(Snapshots.PosFileCol), col(Snapshots.PosIdxCol)).limit(1)
-    Snapshots.commitPositionUpdate(spark, dir,
+    Snapshots.commitPositionUpdate(dir,
       m.select(col(Snapshots.PosFileCol), col(Snapshots.PosIdxCol)),
       m.select(col("k"), lit(99L).as("v")), base = 1) // staged v2 + publish v3
     // the KEYED feed's blind spot: v3 feeds only the I half

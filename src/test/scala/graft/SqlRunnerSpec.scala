@@ -318,7 +318,7 @@ class SqlRunnerSpec extends SparkSpec {
     Snapshots.commit(Seq(("a", 1L), ("a", 1L)).toDF("k", "n"), pdir)
     val m = Snapshots.readResolvedPos(spark, pdir)
       .orderBy(col(Snapshots.PosFileCol), col(Snapshots.PosIdxCol)).limit(1)
-    Snapshots.commitPositionUpdate(spark, pdir,
+    Snapshots.commitPositionUpdate(pdir,
       m.select(col(Snapshots.PosFileCol), col(Snapshots.PosIdxCol)),
       m.select(col("k"), lit(9L).as("n")), base = 1)
     val feed = SqlRunner.runScriptWithSnapshots(spark,

@@ -1,32 +1,15 @@
 package graft
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.EventStream
 
-/** Streaming/batch parity: the streaming tumbling-window aggregation
-  * must produce exactly the batch query's result once the stream is
-  * drained (SURVEY.md §2.11).
+/** Streaming/batch parity: each EventStream operator, run over a
+  * stream, must produce exactly its batch result once the stream is
+  * drained (SURVEY.md §2.11); plus the change-feed subscriptions'
+  * cursor and restart contracts.
   */
 class StreamingSpec extends SparkSpec {
-
-  test("streamed windowed counts equal the batch aggregation") {
-    val dir = java.nio.file.Files.createTempDirectory("stream").toString
-    val events = Tables.load(spark, Sf0001, "events")
-    events.write.mode("overwrite").parquet(dir)
-
-    val q = EventStream.runToMemory(spark, dir, "stream_out", OutputMode.Complete)
-    try {
-      val streamed = spark.table("stream_out")
-        .orderBy("wstart", "event_type").collect()
-      val batch = EventStream.windowedCounts(spark.read.parquet(dir))
-        .orderBy("wstart", "event_type").collect()
-      assert(streamed.length == batch.length && streamed.length > 0)
-      assert(streamed.zip(batch).forall { case (a, b) => a == b })
-    } finally q.stop()
-  }
-
 
   test("streaming dedup drops re-delivered event ids, state bounded by watermark") {
     val dir = java.nio.file.Files.createTempDirectory("dedupstream").toString
@@ -38,7 +21,8 @@ class StreamingSpec extends SparkSpec {
         (2L, t, 1L, "view", 2.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("append").parquet(dir)
-    val q = EventStream.dedupedEvents(EventStream.readStream(spark, dir))
+    val q = EventStream.dedupedEvents(
+        spark.readStream.schema(EventStream.eventSchema).parquet(dir))
       .writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("dedup_out").start()
     try {
@@ -83,31 +67,11 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("snapshot sink: each micro-batch lands as exactly one version; drained union equals input") {
-    val inDir = java.nio.file.Files.createTempDirectory("snapsink_in").toString
-    val outDir = java.nio.file.Files.createTempDirectory("snapsink_out").toString + "/t"
-    val ck = java.nio.file.Files.createTempDirectory("snapsink_ck").toString
-    val docs = Tables.load(spark, Sf0001, "documents")
-      .select("doc_id", "source", "n_chars")
-    docs.repartition(3).write.mode("overwrite").parquet(inDir)
-    val stream = EventStream.readDocStream(spark, inDir, maxFilesPerTrigger = Some(1))
-      .select("doc_id", "source", "n_chars")
-    val q = EventStream.snapshotSink(stream, outDir, ck).start()
-    try q.awaitTermination() finally q.stop()
-    val versions = graft.sources.Snapshots.versions(spark, outDir)
-    assert(versions.size >= 2, s"one-file triggers should land multiple versions, got $versions")
-    val drained = versions.map(v =>
-        graft.sources.Snapshots.read(spark, outDir, Some(v)))
-      .reduce(_ unionByName _)
-    assert(drained.count() == docs.count(),
-      "the union of committed versions must hold every input row exactly once")
-    assert(drained.select("doc_id").distinct().count() == docs.count())
-  }
-
   test("stream-stream interval join equals the batch join once drained") {
     val dir = java.nio.file.Files.createTempDirectory("ssjoin").toString
     Tables.load(spark, Sf0001, "events").write.mode("overwrite").parquet(dir)
-    val streamed = EventStream.purchaseViewJoin(EventStream.readStream(spark, dir))
+    val streamed = EventStream.purchaseViewJoin(
+      spark.readStream.schema(EventStream.eventSchema).parquet(dir))
     val q = streamed.writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("ssjoin_out").start()
     try {
@@ -130,7 +94,8 @@ class StreamingSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("osjoin").toString
     val events = Tables.load(spark, Sf0001, "events")
     events.write.mode("overwrite").parquet(dir)
-    val streamed = EventStream.purchaseViewOuterJoin(EventStream.readStream(spark, dir))
+    val streamed = EventStream.purchaseViewOuterJoin(
+      spark.readStream.schema(EventStream.eventSchema).parquet(dir))
     val q = streamed.writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("osjoin_out").start()
     try {
@@ -179,7 +144,7 @@ class StreamingSpec extends SparkSpec {
     val events = Tables.load(spark, Sf0001, "events")
     events.write.mode("overwrite").parquet(dir)
     val streamed = EventStream.purchaseViewFullOuterJoin(
-      EventStream.readStream(spark, dir))
+      spark.readStream.schema(EventStream.eventSchema).parquet(dir))
     val q = streamed.writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("fojoin_out").start()
     try {
@@ -214,55 +179,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("heartbeats release the outer join's null rows when one side stalls") {
-    // the shipped mitigation for the stall the previous test works
-    // around by hand: after the base drain the view side goes QUIET
-    // FOREVER — only purchases keep arriving — yet the held null rows
-    // must drain, because the heartbeat variant advances BOTH sides'
-    // watermark nodes from every event of the feed
-    val dir = java.nio.file.Files.createTempDirectory("hbjoin").toString
-    val events = Tables.load(spark, Sf0001, "events")
-    events.write.mode("overwrite").parquet(dir)
-    val streamed = EventStream.purchaseViewOuterJoinHeartbeat(
-      EventStream.readStream(spark, dir))
-    val q = streamed.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("hbjoin_out").start()
-    try {
-      q.processAllAvailable()
-      val beforeStall = spark.table("hbjoin_out")
-        .filter(col("user_id") =!= -3L).count()
-      val maxTs = events.agg(org.apache.spark.sql.functions.max(col("ts")))
-        .collect().head.getTimestamp(0)
-      // PURCHASE-ONLY continuation (the stalled-view feed); two
-      // batches so the state store gets a trigger against the
-      // already-advanced watermark
-      for (h <- Seq(3L, 4L)) {
-        events.limit(1)
-          .withColumn("ts", org.apache.spark.sql.functions.lit(
-            new java.sql.Timestamp(maxTs.getTime + h * 3600 * 1000)))
-          .withColumn("event_type", org.apache.spark.sql.functions.lit("purchase"))
-          .withColumn("user_id", org.apache.spark.sql.functions.lit(-3L))
-          .write.mode("append").parquet(dir)
-        q.processAllAvailable()
-      }
-      val got = spark.table("hbjoin_out")
-        .filter(col("user_id") =!= -3L) // drop the continuation's own rows
-        .orderBy("p_id", "v_id").collect()
-      assert(got.length > beforeStall.toInt,
-        "purchase-only progress must have released watermark-held null rows")
-      assert(got.exists(_.isNullAt(3)), "unmatched purchases must carry null views")
-      // full parity on the base events against BOTH batch twins: the
-      // heartbeat variant adds nothing to a batch result
-      val base = spark.read.parquet(dir).filter(col("user_id") =!= -3L)
-      val batch = EventStream.purchaseViewOuterJoin(base)
-        .orderBy("p_id", "v_id").collect()
-      val batchHb = EventStream.purchaseViewOuterJoinHeartbeat(base)
-        .orderBy("p_id", "v_id").collect()
-      assert(batch.sameElements(batchHb), "heartbeats must not change batch semantics")
-      assert(got.length == batch.length && got.sameElements(batch))
-    } finally q.stop()
-  }
-
   test("stream-static enrichment join equals batch twin and keeps no state") {
     val dir = java.nio.file.Files.createTempDirectory("enrich").toString
     Tables.load(spark, Sf0001, "events").write.mode("overwrite").parquet(dir)
@@ -273,7 +189,7 @@ class StreamingSpec extends SparkSpec {
       .select(col("id").as("user_id"),
         concat(lit("seg_"), col("id") % 4).as("segment"))
     val streamed = EventStream.enrichWithDim(
-      EventStream.readStream(spark, dir), dim)
+      spark.readStream.schema(EventStream.eventSchema).parquet(dir), dim)
       .select("event_id", "user_id", "segment")
     val q = streamed.writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("enrich_out").start()
@@ -292,428 +208,6 @@ class StreamingSpec extends SparkSpec {
       assert(st == null || st.isEmpty,
         s"stream-static join must not create a state store: $st")
     } finally q.stop()
-  }
-
-  test("streamed quality gates (t20/t25 batteries) equal the batch batteries once drained") {
-    // documents arrive over MULTIPLE micro-batches (maxFilesPerTrigger=1
-    // over a 3-file layout); the foreachBatch gate scores each batch
-    // with the SAME battery function the declared batch queries use,
-    // so the drained union must equal the batch result row for row —
-    // including keep flags at batch boundaries
-    val dir = java.nio.file.Files.createTempDirectory("docstream").toString
-    Tables.load(spark, Sf0001, "documents")
-      .repartition(3).write.mode("overwrite").parquet(dir)
-    for ((name, battery) <- Seq(
-        "gopher" -> (graft.queries.TextQ.gopherBattery _),
-        "repetition" -> (graft.queries.TextQ.repetitionBattery _))) {
-      val out = java.nio.file.Files.createTempDirectory(s"docscore_$name").toString
-      val ckpt = java.nio.file.Files.createTempDirectory(s"docscore_ck_$name").toString
-      val q = EventStream.scoreDocs(
-        EventStream.readDocStream(spark, dir, maxFilesPerTrigger = Some(1)),
-        battery, out, ckpt).start()
-      try q.awaitTermination() finally q.stop()
-      val batchCols = battery(spark.read.parquet(dir)).columns
-      val streamed = spark.read.parquet(out)
-        .select(batchCols.map(col): _*).orderBy("doc_id").collect()
-      val batch = battery(spark.read.parquet(dir)).orderBy("doc_id").collect()
-      assert(streamed.length == batch.length && streamed.length > 0,
-        s"$name: drained stream must cover every document")
-      assert(streamed.zip(batch).forall { case (a, b) => a == b },
-        s"$name: per-document scores must be identical across the two paths")
-      // multi-batch evidence: the epoch-keyed sink saw >1 micro-batch
-      assert(spark.read.parquet(out).select("epoch").distinct().count() > 1,
-        s"$name: the parity claim needs multiple micro-batches to be meaningful")
-    }
-  }
-
-  test("streaming IVM state (x35 twin) equals the one-shot join aggregate once drained") {
-    // lineitem facts arrive over multiple micro-batches; each batch
-    // delta-joins the static orders dimension and folds into the
-    // Snapshots-committed per-customer state — the drained state must
-    // equal the one-shot aggregate over the full join (the x35
-    // identity, per micro-batch instead of one split)
-    import graft.ops.IncrementalAgg
-    import graft.sources.Snapshots
-    val src = java.nio.file.Files.createTempDirectory("ivm_src").toString
-    val state = java.nio.file.Files.createTempDirectory("ivm_state").toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("ivm_ckpt").toString
-    val li = Tables.load(spark, Sf0001, "lineitem")
-      .select(col("l_orderkey"), col("l_extendedprice"))
-    li.repartition(3).write.mode("overwrite").parquet(src)
-    val orders = Tables.load(spark, Sf0001, "orders")
-      .select(col("o_orderkey"), col("o_custkey"))
-    val q = EventStream.ivmSink(
-      EventStream.readLineitemStream(spark, src, maxFilesPerTrigger = Some(1)),
-      orders, state, ckpt).start()
-    try q.awaitTermination() finally q.stop()
-    // multi-batch evidence: one committed state version per micro-batch
-    assert(Snapshots.versions(spark, state).size > 1,
-      "the parity claim needs multiple micro-batches to be meaningful")
-    val streamed = Snapshots.read(spark, state)
-      .orderBy("o_custkey").collect()
-    val oneShot = IncrementalAgg.state(
-      spark.read.parquet(src).join(orders,
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey"), col("l_extendedprice")),
-      "o_custkey", "l_extendedprice").orderBy("o_custkey").collect()
-    assert(streamed.length == oneShot.length && streamed.length > 0)
-    assert(streamed.zip(oneShot).forall { case (a, b) => a == b },
-      "drained IVM state must equal the one-shot join aggregate")
-  }
-
-  test("streaming incremental ANALYZE: drained mergeable stats equal the one-shot profile") {
-    // x41's streaming twin: per micro-batch the stats state folds
-    // into the catalog state; exact fields must merge to the
-    // one-shot recompute by value, the merged NDV sketch must land
-    // inside its 3σ envelope — catalog freshness under an unbounded
-    // feed without ever re-scanning history
-    import graft.sources.Snapshots
-    val src = java.nio.file.Files.createTempDirectory("st_src").toString
-    val state = java.nio.file.Files.createTempDirectory("st_state").toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("st_ckpt").toString
-    Tables.load(spark, Sf0001, "lineitem")
-      .select(col("l_orderkey"), col("l_extendedprice"))
-      .repartition(3).write.mode("overwrite").parquet(src)
-    val q = EventStream.statsSink(
-      EventStream.readLineitemStream(spark, src, maxFilesPerTrigger = Some(1)),
-      "l_extendedprice", "l_orderkey", state, ckpt).start()
-    try q.awaitTermination() finally q.stop()
-    assert(Snapshots.versions(spark, state).size > 1,
-      "the merge claim needs multiple micro-batches to be meaningful")
-    val r = Snapshots.read(spark, state)
-      .select(col("n_rows"), col("n_nulls"), col("min_num"), col("max_num"),
-        hll_sketch_estimate(col("key_sketch")).as("est"))
-      .collect().head
-    val full = spark.read.parquet(src)
-    val exactRow = full.agg(count(lit(1)), min(col("l_extendedprice")),
-      max(col("l_extendedprice")), countDistinct(col("l_orderkey"))).collect().head
-    assert(r.getLong(0) == exactRow.getLong(0) && r.getLong(1) == 0L,
-      "merged counts must equal the one-shot profile exactly")
-    assert(r.getDouble(2) == exactRow.getDouble(1) &&
-      r.getDouble(3) == exactRow.getDouble(2),
-      "merged bounds must equal the one-shot profile exactly")
-    val exactNdv = exactRow.getLong(3)
-    assert(math.abs(r.getLong(4) - exactNdv) <=
-      math.max(3 * (1.04 / math.sqrt(1 << 12)) * exactNdv, 8.0),
-      s"merged sketch estimate ${r.getLong(4)} outside the envelope of $exactNdv")
-    // replay safety: re-folding a committed epoch merges nothing
-    val before = Snapshots.versions(spark, state)
-    assert(EventStream.statsFold(full, "l_extendedprice", "l_orderkey",
-      state, epochId = 0).isEmpty)
-    assert(Snapshots.versions(spark, state) == before)
-  }
-
-  test("multi-table txn sink: docs+stats land atomically per epoch; replay and torn attempts safe") {
-    // x45's streaming twin: every micro-batch commits its documents
-    // AND the folded stats catalog under ONE decision marker — a
-    // reader can never see one without the other, across an
-    // unbounded feed with at-least-once replays
-    import graft.sources.Snapshots
-    val src = java.nio.file.Files.createTempDirectory("tx_src").toString
-    val docsDir = java.nio.file.Files.createTempDirectory("tx_docs").toString + "/t"
-    val statsDir = java.nio.file.Files.createTempDirectory("tx_stats").toString + "/t"
-    val txnDir = java.nio.file.Files.createTempDirectory("tx_txn").toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("tx_ckpt").toString
-    Tables.load(spark, Sf0001, "documents")
-      .repartition(3).write.mode("overwrite").parquet(src)
-    val q = EventStream.txnSink(
-      EventStream.readDocStream(spark, src, maxFilesPerTrigger = Some(1)),
-      docsDir, statsDir, txnDir, ckpt).start()
-    try q.awaitTermination() finally q.stop()
-    val dv = Snapshots.versions(spark, docsDir)
-    val sv = Snapshots.versions(spark, statsDir)
-    assert(dv.size > 1, "atomicity across epochs needs multiple micro-batches")
-    assert(dv.size == sv.size, "every epoch lands docs AND stats or neither")
-    // the appended doc versions reassemble the exact source corpus
-    val total = dv.map(v => Snapshots.read(spark, docsDir, Some(v)).count()).sum
-    val full = spark.read.parquet(src)
-    assert(total == full.count())
-    // the latest stats state is the one-shot profile of everything
-    val r = Snapshots.read(spark, statsDir)
-      .select(col("n_rows"), col("min_num"), col("max_num")).collect().head
-    val exact = full.agg(count(lit(1)), min(col("n_chars").cast("double")),
-      max(col("n_chars").cast("double"))).collect().head
-    assert(r.getLong(0) == exact.getLong(0) &&
-      r.getDouble(1) == exact.getDouble(1) && r.getDouble(2) == exact.getDouble(2),
-      "drained stats must equal the one-shot profile")
-    // replay of a committed epoch stages nothing
-    assert(!EventStream.txnFold(full, docsDir, statsDir, txnDir, epochId = 0))
-    assert(Snapshots.versions(spark, docsDir) == dv)
-    // a torn attempt (crashed after staging docs, before the marker)
-    // must not suppress the retry, and its ghost stays invisible
-    Snapshots.txnStageEpoch(full.limit(1), docsDir, txnDir,
-      "epoch-99-deadbeef", epochId = 99)
-    assert(!Snapshots.epochCommitted(spark, docsDir, 99))
-    assert(EventStream.txnFold(full.limit(2), docsDir, statsDir, txnDir,
-      epochId = 99), "the retry must land epoch 99")
-    assert(Snapshots.versions(spark, docsDir).size == dv.size + 1,
-      "exactly the retry's version is visible — the ghost is not")
-    assert(!EventStream.txnFold(full, docsDir, statsDir, txnDir, epochId = 99))
-  }
-
-  test("IVM fold is epoch-idempotent: a replayed micro-batch never double-counts the delta") {
-    // foreachBatch is at-least-once: a crash after the state commit
-    // but before the checkpoint offset commit re-executes the same
-    // epoch. Pre-fix, the replay re-merged the delta into the
-    // already-updated state (sums/counts silently doubled); the
-    // epoch-tagged commit must skip the whole fold instead.
-    import graft.sources.Snapshots
-    val state = java.nio.file.Files.createTempDirectory("ivmr_state").toString + "/t"
-    val orders = Tables.load(spark, Sf0001, "orders")
-      .select(col("o_orderkey"), col("o_custkey"))
-    val batch = Tables.load(spark, Sf0001, "lineitem")
-      .select(col("l_orderkey"), col("l_extendedprice")).limit(200)
-    assert(EventStream.ivmFold(batch, orders, state, epochId = 0) == Some(1))
-    val after = Snapshots.read(spark, state).orderBy("o_custkey").collect()
-    // failure recovery replays epoch 0: no new version, state unchanged
-    assert(EventStream.ivmFold(batch, orders, state, epochId = 0).isEmpty)
-    assert(Snapshots.versions(spark, state) == Seq(1))
-    assert(Snapshots.read(spark, state).orderBy("o_custkey").collect()
-      .sameElements(after), "a replayed epoch must not re-merge its delta")
-    // the next real epoch still folds
-    assert(EventStream.ivmFold(batch, orders, state, epochId = 1) == Some(2))
-    assert(Snapshots.read(spark, state).agg(sum("n")).head.getLong(0) == 400)
-  }
-
-  test("streaming MERGE folds compose to the one-shot merge and replay-skip (x51 twin)") {
-    import spark.implicits._
-    import graft.sources.Snapshots
-    val state = java.nio.file.Files.createTempDirectory("mrg_state").toString + "/t"
-    // seq-consistent arms: a negative balance is a delete signal —
-    // it must delete when matched and NEVER insert when unmatched
-    val del = (_: Column, s: Column) => s("bal") < 0
-    val ins = (s: Column) => s("bal") >= 0
-    def fold(rows: Seq[(Long, Double, Long)], epoch: Long) =
-      EventStream.mergeFold(rows.toDF("id", "bal", "seq"), state,
-        "id", "seq", del, ins, epoch)
-    // batch 0: inserts + an in-batch latest-wins reduce (id 2)
-    assert(fold(Seq((1L, 10.0, 1L), (2L, 5.0, 2L), (2L, 20.0, 3L)), 0) == Some(1))
-    // batch 1: update 1, delete 2, delete-signal for absent 3 (no-op)
-    assert(fold(Seq((1L, 11.0, 4L), (2L, -1.0, 5L), (3L, -9.0, 6L)), 1) == Some(2))
-    // batch 2: re-insert 2 after its delete
-    assert(fold(Seq((2L, 7.0, 7L)), 2) == Some(3))
-    val drained = Snapshots.read(spark, state).orderBy("id")
-      .as[(Long, Double)].collect().toSeq
-    assert(drained == Seq((1L, 11.0), (2L, 7.0)))
-    // the drained state == one-shot mergeInto of the GLOBAL
-    // latest-wins changeset into an empty target
-    val all = Seq((1L, 10.0, 1L), (2L, 5.0, 2L), (2L, 20.0, 3L),
-      (1L, 11.0, 4L), (2L, -1.0, 5L), (3L, -9.0, 6L), (2L, 7.0, 7L))
-      .toDF("id", "bal", "seq")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"id").orderBy($"seq".desc)
-    val latest = all.withColumn("_rn", row_number().over(w))
-      .filter($"_rn" === 1).drop("_rn", "seq")
-    val oneShot = graft.ops.Merge.mergeInto(latest.limit(0), latest, "id",
-        matchedDelete = del, notMatchedInsert = ins)
-      .orderBy("id").as[(Long, Double)].collect().toSeq
-    assert(oneShot == drained, "per-batch folds must compose to the one-shot merge")
-    // failure recovery replays epoch 2: no new version, state unchanged
-    assert(fold(Seq((2L, 7.0, 7L)), 2).isEmpty)
-    assert(Snapshots.versions(spark, state) == Seq(1, 2, 3))
-  }
-
-  test("streaming MV-refresh folds compose to the one-shot refresh and replay-skip (x70 twin)") {
-    import spark.implicits._
-    import graft.sources.Snapshots
-    import graft.plans.{MatView, MvCatalog}
-    val root = java.nio.file.Files.createTempDirectory("mvstream").toString
-    val factDir = s"$root/fact"
-    val mvDir = s"$root/mv"
-    val base = Seq(("a", 10L, 2.0), ("b", 20L, 4.0)).toDF("g", "qty", "price")
-    Snapshots.commit(base, factDir)
-    MatView.create(spark, "spec_stream_mv", Snapshots.read(spark, factDir),
-      mvDir, groupCols = Seq("g"),
-      sumCols = Seq("qty" -> col("qty")),
-      minMaxCols = Seq("price" -> col("price")))
-    def fold(rows: Seq[(String, Long, Double)], epoch: Long) =
-      graft.plans.MatView.refreshEpoch(spark, "spec_stream_mv",
-        rows.toDF("g", "qty", "price"), epoch)
-    assert(fold(Seq(("a", 5L, 1.0), ("c", 7L, 9.0)), 0) == Some(2))
-    assert(fold(Seq(("b", 1L, 0.5)), 1) == Some(3))
-    // replayed epoch folds nothing — no version, state unchanged
-    assert(fold(Seq(("b", 1L, 0.5)), 1).isEmpty)
-    assert(Snapshots.versions(spark, mvDir) == Seq(1, 2, 3))
-    val drained = Snapshots.read(spark, mvDir)
-      .select($"g", $"sum_qty", $"min_price", $"max_price", $"n_rows")
-      .as[(String, Long, Double, Double, Long)].collect().toSet
-    // == the one-shot refresh of the GLOBAL delta over the base view
-    assert(drained == Set(
-      ("a", 15L, 1.0, 2.0, 2L),
-      ("b", 21L, 0.5, 4.0, 2L),
-      ("c", 7L, 9.0, 9.0, 1L)),
-      "per-batch folds must compose to the one-shot refresh")
-    // the fold DISARMS auto-rewrite: the stored view now holds stream
-    // rows the registered coverage never named, so a coverage-shaped
-    // read must NOT be served the view (it would over-count)
-    val baseAgg = Snapshots.read(spark, factDir)
-      .groupBy($"g").agg(sum($"qty").as("s"))
-    val served = baseAgg.queryExecution.optimizedPlan.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.rootPaths.map(_.toString)
-          case _ => Nil
-        }
-    }.flatten.exists(_.contains(mvDir))
-    assert(!served, "a streaming-folded view must not auto-serve")
-    assert(baseAgg.as[(String, Long)].collect().toSet ==
-      Set(("a", 10L), ("b", 20L)), "the base read answers from its own scan")
-    MvCatalog.remove("spec_stream_mv")
-  }
-
-  test("idempotent foreachBatch sink: replayed epochs do not duplicate") {
-    val src = java.nio.file.Files.createTempDirectory("idem_src").toString
-    val out = java.nio.file.Files.createTempDirectory("idem_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("idem_ckpt").toString
-    val events = Tables.load(spark, Sf0001, "events").limit(100)
-    events.write.mode("overwrite").parquet(src)
-    val q = EventStream.idempotentParquetSink(
-      EventStream.readStream(spark, src), out, ckpt).start()
-    try q.awaitTermination() finally q.stop()
-    val firstCount = spark.read.parquet(out).count()
-    assert(firstCount == 100)
-    // simulate a replay of epoch 0 (failure re-execution): same batch,
-    // same epoch id -> overwrite, not append
-    spark.read.parquet(src).write.mode("overwrite").parquet(s"$out/epoch=0")
-    assert(spark.read.parquet(out).count() == firstCount)
-  }
-
-  test("watermark bounds state: late data beyond watermark is dropped in append mode") {
-    // Two files arriving in order: recent batch first, then an event
-    // 1h older than the max seen ts -> beyond the 10min watermark.
-    val dir = java.nio.file.Files.createTempDirectory("late").toString
-    import spark.implicits._
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
-    val late = java.sql.Timestamp.valueOf("2024-01-01 09:00:00")
-    Seq((1L, t0, 1L, "click", 1.0, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("append").parquet(dir)
-
-    val agg = EventStream.windowedCounts(EventStream.readStream(spark, dir))
-    val q = agg.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("late_out").start()
-    try {
-      q.processAllAvailable()
-      Seq((2L, late, 1L, "click", 1.0, "{}"))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .write.mode("append").parquet(dir)
-      q.processAllAvailable()
-      // the late event's 09:00 window must never emit with its row
-      val lateRows = spark.table("late_out")
-        .filter(col("wstart") === lit("2024-01-01 09:00:00").cast("timestamp"))
-        .collect()
-      assert(lateRows.isEmpty)
-    } finally q.stop()
-  }
-
-  test("streaming index maintenance: drift fires the retrain from the ingest path (v26 twin)") {
-    import graft.sources.Snapshots
-    import graft.ops.Ivf
-    val k = queries.VectorQ.IvfClusters
-    val passes = queries.VectorQ.IvfIters
-    val driftMax = queries.VectorQ.DriftMax256
-    val mod = queries.VectorQ.AppendSplitMod
-    val histMax = queries.VectorQ.AppendHistMax
-    val e = Tables.load(spark, Sf0001, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-    val hist = e.filter(col("vec_id") % mod < histMax)
-      .select(col("vec_id"),
-        col("embedding").cast("array<double>").as("embedding"))
-    val drifted = e.filter(col("vec_id") % mod >= histMax)
-      .select(col("vec_id"),
-        transform(col("embedding").cast("array<double>"),
-          x => x * lit(0.1) + lit(3.0)).as("embedding"))
-    // seed generation 1 on the history split (v26's stored state)
-    val base = java.nio.file.Files.createTempDirectory("st_idx").toString
-    val (centDir, asgDir, txnDir) =
-      (s"$base/cents", s"$base/asg", s"$base/txn")
-    val gen1 = Ivf.buildExact(hist, "vec_id", "embedding",
-      k = k, assignPasses = passes)
-    Snapshots.commit(gen1.centroids, centDir)
-    Snapshots.commit(gen1.assigned, asgDir)
-    // the drifted nightly batch arrives as THREE micro-batches
-    val src = s"$base/src"
-    drifted.repartition(3).write.mode("overwrite").parquet(src)
-    val ckpt = s"$base/ckpt"
-    val q = graft.streaming.EventStream.indexSink(
-      graft.streaming.EventStream.readVectorStream(spark, src,
-        maxFilesPerTrigger = Some(1)),
-      centDir, asgDir, txnDir, k, passes, driftMax, ckpt).start()
-    try q.awaitTermination() finally q.stop()
-    // the blob batches must have fired at least one retrain, landed
-    // atomically (both tables advanced through the txn)
-    assert(Snapshots.versions(spark, centDir).size > 1,
-      "drifted micro-batches must fire the monitor's retrain verdict")
-    // final state parity with v26's one-shot batch loop: when the
-    // last drifted epoch fires, the committed generation is the
-    // exact retrain over the WHOLE corpus — decimal-exact training
-    // makes it bit-equal to the batch query's gen-2
-    val batchGen2 = Ivf.buildExact(hist.unionByName(drifted),
-      "vec_id", "embedding", k = k, assignPasses = passes)
-    val streamedCents = Snapshots.read(spark, centDir)
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1))).toSet
-    val batchCents = batchGen2.centroids
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1))).toSet
-    assert(streamedCents == batchCents,
-      "streamed folds must compose to the one-shot retrain bit-exactly")
-    val servedN = Snapshots.read(spark, asgDir).count()
-    assert(servedN == hist.count() + drifted.count(),
-      "the served assignment must cover the whole corpus")
-    // replay safety: re-folding a committed epoch lands nothing
-    val before = (Snapshots.versions(spark, centDir),
-      Snapshots.versions(spark, asgDir))
-    val (reFired, reLanded) = graft.streaming.EventStream.indexFold(
-      drifted, centDir, asgDir, txnDir, k, passes, driftMax, epochId = 0)
-    assert(!reFired && !reLanded)
-    assert((Snapshots.versions(spark, centDir),
-      Snapshots.versions(spark, asgDir)) == before)
-    // probe parity: a searcher over the committed tables serves the
-    // same neighbors as one over the batch-loop index
-    val probes = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val served = Ivf.probe(Ivf.Index(Snapshots.read(spark, centDir),
-        Snapshots.read(spark, asgDir), "vec_id"), probes, 2, 3)
-      .select(col("qid"), col("nb_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = Ivf.probe(batchGen2, probes, 2, 3)
-      .select(col("qid"), col("nb_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(served == want)
-  }
-
-  test("streaming WAP onto a branch: epochs stage invisibly, replay folds nothing, fast-forward publishes") {
-    import graft.sources.{Branches, Snapshots}
-    import spark.implicits._
-    val src = java.nio.file.Files.createTempDirectory("brsrc").toString
-    val dir = java.nio.file.Files.createTempDirectory("brtbl").toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("brckpt").toString
-    val li = Tables.load(spark, Sf0001, "lineitem")
-      .select(col("l_orderkey"), col("l_extendedprice"))
-    li.limit(300).repartition(3).write.mode("overwrite").parquet(src)
-    val total = spark.read.parquet(src).count()
-    // the production table: v1 seeds, the stream lands on a branch
-    Snapshots.commit(Seq((-1L, 0.0)).toDF("l_orderkey", "l_extendedprice"), dir)
-    Branches.create(spark, dir, "ingest", 1)
-    val q = EventStream.branchSink(
-      EventStream.readLineitemStream(spark, src, maxFilesPerTrigger = Some(1)),
-      dir, "ingest", ckpt).start()
-    try q.awaitTermination() finally q.stop()
-    // multiple epochs landed on the CHAIN; latest readers saw none
-    val chainLen = Snapshots.allVersions(spark, dir).size - 1
-    assert(chainLen > 1, "the WAP claim needs multiple micro-batches")
-    assert(Snapshots.versions(spark, dir) == Seq(1),
-      "staged epochs must be invisible to latest readers")
-    assert(Branches.read(spark, dir, "ingest").count() == total + 1)
-    // at-least-once redelivery: a replayed epoch folds nothing
-    val head = Branches.head(spark, dir, "ingest")
-    assert(EventStream.branchFold(
-      spark.read.parquet(src).limit(5), dir, "ingest", epochId = 0).isEmpty)
-    assert(Branches.head(spark, dir, "ingest") == head)
-    // the audit passes; fast-forward publishes the whole chain
-    val published = Branches.fastForward(spark, dir, "ingest")
-    assert(published.size == chainLen)
-    assert(Snapshots.readResolved(spark, dir).count() == total + 1)
   }
 
   test("x103 change-feed subscription: restart resumes at the cursor; drained ≡ batch replay") {

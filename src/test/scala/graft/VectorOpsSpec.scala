@@ -47,13 +47,6 @@ class VectorOpsSpec extends SparkSpec {
     assert(r.getDouble(1) == 0.0)
   }
 
-  test("l2normalize produces unit vectors") {
-    val df = Seq(Tuple1(Array(3.0f, 4.0f))).toDF("v")
-    val out = df.select(VectorOps.l2normalize(col("v")).as("u"))
-      .select(VectorOps.l2norm(col("u"))).head.getDouble(0)
-    assert(math.abs(out - 1.0) < 1e-12)
-  }
-
   test("topK returns k best with deterministic tiebreak") {
     val corpus = Seq(
       (1L, Array(1.0f, 0.0f)), (2L, Array(0.9f, 0.1f)),
