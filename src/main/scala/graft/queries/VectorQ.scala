@@ -161,6 +161,18 @@ object VectorQ {
     }
   }
 
+  /** The layer-0 NSW graph over the whole corpus, Derived-shared per
+    * session as `nsw_edges`. Every query that reads the graph builds it
+    * here, so which query runs first cannot change the graph the
+    * others read. The index trains before Derived's lock is taken. */
+  private def nswEdges(s: SparkSession, d: String): DataFrame = {
+    val idx = learnedIndex(s, d)
+    Derived.of(s, d, "nsw_edges") {
+      graft.ops.Nsw.build(emb(s, d), "vec_id", "embedding", idx.centroids,
+        NswBlocks, NswM, NswRounds)
+    }
+  }
+
   /** v38/v39's layer hierarchy: layer 0 over the whole corpus, layer
     * ℓ over the members of level ≥ ℓ, each Derived-shared per session
     * (`nsw_edges`, `nsw_l{ℓ}_edges`). */
@@ -169,7 +181,7 @@ object VectorQ {
     val e = emb(s, d)
     def build(members: DataFrame, rounds: Int) = graft.ops.Nsw.build(members,
       "vec_id", "embedding", idx.centroids, NswBlocks, NswM, rounds)
-    Derived.of(s, d, "nsw_edges")(build(e, NswRounds)) +:
+    nswEdges(s, d) +:
       (1 to NswMaxLevel).map { l =>
         Derived.of(s, d, s"nsw_l${l}_edges")(build(
           e.filter(graft.ops.Nsw.levelOf(col("vec_id"), NswMaxLevel) >= l),
@@ -267,10 +279,7 @@ object VectorQ {
     val e2 = emb(s, d)
     val idx = learnedIndex(s, d)
     val walkTouched = graft.ops.Nsw.searchCandidateCount(
-      Derived.of(s, d, "nsw_edges") {
-        graft.ops.Nsw.build(e2, "vec_id", "embedding", idx.centroids,
-          NswBlocks, NswM, NswRounds)
-      },
+      nswEdges(s, d),
       e2, "vec_id", "embedding",
       graft.ops.Nsw.entries(idx.assigned, "vec_id"),
       e2.filter(col("vec_id") < 5)
@@ -1007,10 +1016,7 @@ object VectorQ {
     "v30_graph_ann" -> ((s, d) => {
       val idx = learnedIndex(s, d)
       val e = emb(s, d)
-      val edges = Derived.of(s, d, "nsw_edges") {
-        graft.ops.Nsw.build(e, "vec_id", "embedding", idx.centroids,
-          NswBlocks, NswM, NswRounds)
-      }
+      val edges = nswEdges(s, d)
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       val res = graft.ops.Nsw.search(edges, e, "vec_id", "embedding",
@@ -1244,10 +1250,7 @@ object VectorQ {
     "v32_pq_graph_walk" -> ((s, d) => {
       val idx = learnedIndex(s, d)
       val e = emb(s, d)
-      val edges = Derived.of(s, d, "nsw_edges") {
-        graft.ops.Nsw.build(e, "vec_id", "embedding", idx.centroids,
-          NswBlocks, NswM, NswRounds)
-      }
+      val edges = nswEdges(s, d)
       val recon = graft.ops.Pq.reconstruct(pqIndex(s, d))
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -1293,10 +1296,7 @@ object VectorQ {
       import s.implicits._
       val idx = learnedIndex(s, d)
       val e = emb(s, d)
-      val edges = Derived.of(s, d, "nsw_edges") {
-        graft.ops.Nsw.build(e, "vec_id", "embedding", idx.centroids,
-          NswBlocks, NswM, NswRounds)
-      }
+      val edges = nswEdges(s, d)
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       val truth = knnTruth(s, d)
@@ -1333,10 +1333,7 @@ object VectorQ {
       val el = Tables.load(s, d, "embeddings")
         .select(col("vec_id"), col("label"), col("embedding"))
       val e = emb(s, d)
-      val edges = Derived.of(s, d, "nsw_edges") {
-        graft.ops.Nsw.build(e, "vec_id", "embedding", idx.centroids,
-          NswBlocks, NswM, NswRounds)
-      }
+      val edges = nswEdges(s, d)
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       // the exact filtered truth (v22's pre-filter path)
@@ -1568,10 +1565,7 @@ object VectorQ {
       import graft.sources.Snapshots
       val e = emb(s, d)
       val idx = learnedIndex(s, d)
-      val edges = Derived.of(s, d, "nsw_edges") {
-        graft.ops.Nsw.build(e, "vec_id", "embedding", idx.centroids,
-          NswBlocks, NswM, NswRounds)
-      }
+      val edges = nswEdges(s, d)
       val pq = pqIndex(s, d)
       val srcDir = freshSnapDir(s, d, "v36_src")
       val centDir = freshSnapDir(s, d, "v36_cents")

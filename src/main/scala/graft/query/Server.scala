@@ -6,7 +6,8 @@ import java.nio.charset.StandardCharsets
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 
 /** Minimal HTTP serving surface over [[Agent.run]] — the reference's
   * FastAPI backend re-expressed on the JDK's built-in server (no new
@@ -31,7 +32,7 @@ import org.apache.spark.sql.Column
   * handler works unchanged whether the session is local[32] or a
   * 1000-executor cluster. The driver holds at most 5 citation rows
   * per in-flight request; the response and sink lines are serialized
-  * from those rows with no further Spark job, and no driver-side
+  * from those rows with no further SQL execution, and no driver-side
   * corpus copy exists beyond the corpus cache its builder pinned.
   */
 object Server {
@@ -56,6 +57,7 @@ object Server {
   def start(corpus: Agent.Corpus, queryVec: Column, port: Int = 0,
             historyDir: Option[String] = None): Handle = {
     val server = HttpServer.create(new InetSocketAddress(port), 0)
+    val spark = corpus.chunksV.sparkSession
     // Orders sink appends against /reset, so /reset never deletes a
     // directory under an in-flight append. Appends need no mutual
     // exclusion (each writes its own uniquely named file), and the
@@ -83,11 +85,10 @@ object Server {
             val res = Agent.run(corpus, qNode.asText, queryVec,
               topK = topK, historyDir = None)
             historyDir.foreach { dir =>
-              val spark = corpus.chunksV.sparkSession
               val lines = Agent.sinkLines(spark, qNode.asText, res)
               sinkLock.synchronized(Agent.appendSinks(spark, dir, lines))
             }
-            (200, queryResponse(res))
+            (200, queryResponse(spark, res))
           }
       }
     })
@@ -198,23 +199,16 @@ object Server {
 
   /** backend/app.py:100-110's response shape. Citations carry the
     * search projection (chunk/paper ids, title, section, text,
-    * score — tools.py:79-86) straight from the result's driver-local
-    * citation rows. */
-  private def queryResponse(res: Agent.AgentResult): ObjectNode = {
+    * score — tools.py:79-86), written from the result's citation rows
+    * as `to_json` would write them. */
+  private def queryResponse(spark: SparkSession, res: Agent.AgentResult): ObjectNode = {
     val node = mapper.createObjectNode()
     node.put("answer", res.answer)
     val cits: ArrayNode = node.putArray("citations")
-    graft.sources.Sources.jsonLines(res.citations).foreach(s => cits.add(mapper.readTree(s)))
-    val confidence = {
-      var best = 0.0
-      val it = cits.elements()
-      while (it.hasNext) {
-        val sc = it.next().get("score")
-        if (sc != null && sc.isNumber) best = math.max(best, sc.asDouble)
-      }
-      math.round(best * 1000).toDouble / 1000 // round(conf, 3), app.py:96
-    }
-    node.put("confidence", confidence)
+    Bridge.jsonLines(spark, res.citations.schema, res.citationRows)
+      .foreach(s => cits.add(mapper.readTree(s)))
+    // round(conf, 3), app.py:96
+    node.put("confidence", math.round(Agent.confidence(res) * 1000).toDouble / 1000)
     node.put("retrieval_mode", "agentic")
     node.put("tools_used", res.toolsUsed.mkString(","))
     node.put("steps", res.steps)

@@ -14,16 +14,6 @@ object Sources {
   def appendJsonl(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Append).json(path)
 
-  /** `df`'s rows as JSON lines from Spark's own JSON generator, so
-    * field names, omitted null fields and the timestamp format match
-    * what [[appendJsonl]] writes. Over a driver-local DataFrame the
-    * optimizer folds the projection into the local relation: no Spark
-    * job runs. */
-  def jsonLines(df: DataFrame): Seq[String] = {
-    import org.apache.spark.sql.functions.{col, struct, to_json}
-    df.select(to_json(struct(col("*")))).collect().map(_.getString(0)).toSeq
-  }
-
   /** Driver-side append of a few JSON lines to the log at `path`, the
     * small-record twin of [[appendJsonl]]: each call adds one
     * `part-<uuid>.json`, written under a hidden temp name (which

@@ -160,6 +160,63 @@ class AgentSpec extends SparkSpec {
     assert(hist.getSeq[String](0) == cited)
   }
 
+  test("citation, history and eval_metrics lines are byte-equal to to_json(struct(*))") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.graft.Bridge
+    val question = "what is \"spark\"\nquery — naïve 数据 ✓"
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try {
+      val ran = Agent.run(corpus, question, queryVec)
+      val schema = ran.citations.schema
+      assert(ran.citationRows.size >= 2)
+      // the top citation loses its score and section name
+      val nulled = Set("score", "section_name")
+      val first = Row.fromSeq(schema.fieldNames.toSeq.zip(ran.citationRows.head.toSeq)
+        .map { case (f, v) => if (nulled(f)) null else v })
+      val rows = first +: ran.citationRows.tail
+      val res = ran.copy(citations = spark.createDataFrame(rows.asJava, schema),
+        citationRows = rows)
+      def toJson(df: DataFrame): Seq[String] =
+        df.select(to_json(struct(col("*")))).collect().map(_.getString(0)).toSeq
+      def written(df: DataFrame): Seq[String] =
+        Bridge.jsonLines(spark, df.schema, df.collect().toSeq)
+      val cited = Bridge.jsonLines(spark, schema, rows)
+      assert(cited == toJson(res.citations))
+      assert(!cited.head.contains("\"score\"") && !cited.head.contains("section_name"))
+      // the papers schema carries a null publication_year on every row
+      val papers = corpus.papers.orderBy("paper_id").limit(3)
+      assert(papers.filter(col("publication_year").isNull).count() == 3)
+      assert(written(papers) == toJson(papers))
+      for (df <- Seq(Agent.historyRecord(spark, question, res),
+                     Agent.evalMetricsRow(spark, question, res))) {
+        val lines = written(df)
+        assert(lines == toJson(df) && lines.size == 1, df.schema.treeString)
+        assert(lines.head.contains("naïve 数据 ✓") && lines.head.contains("\\\"spark\\\"\\nquery"))
+      }
+      // the eval timestamp is rendered in the session zone, as to_json does
+      assert(written(Agent.evalMetricsRow(spark, question, res)).head
+        .matches(".*\"timestamp\":\"[0-9T:.-]+-0[78]:00\".*"))
+      // the sinks Agent.run writes read back under their schemas, with
+      // both records stamped from one instant
+      val dir = java.nio.file.Files.createTempDirectory("graft_sink_lines").toString
+      val logged = Agent.run(corpus, question, queryVec, historyDir = Some(dir))
+      val hist = spark.read.schema(Agent.historyRecord(spark, question, logged).schema)
+        .json(s"$dir/history").head
+      val eval = spark.read.schema(Agent.EvalMetricsSchema).json(s"$dir/eval_metrics").head
+      val want = Agent.evalMetricsRow(spark, question, logged).head
+      for (f <- Agent.EvalMetricsSchema.fieldNames.filter(_ != "timestamp"))
+        assert(eval.get(eval.fieldIndex(f)) == want.get(want.fieldIndex(f)), f)
+      assert(hist.getAs[String]("query") == question && hist.getAs[String]("answer") == logged.answer)
+      assert(hist.getSeq[Row](hist.fieldIndex("chunks")).map(_.getAs[String]("chunk_id")) ==
+        logged.citationRows.map(_.getAs[String]("chunk_id")))
+      val stamped = spark.createDataFrame(java.util.List.of(Row(hist.getAs[String]("timestamp"))),
+          org.apache.spark.sql.types.StructType.fromDDL("ts string"))
+        .select(date_trunc("millisecond", col("ts").cast("timestamp"))).head.getTimestamp(0)
+      assert(stamped == eval.getAs[java.sql.Timestamp]("timestamp"))
+    } finally spark.conf.set("spark.sql.session.timeZone", zone)
+  }
+
   test("callTool dispatches by name with argument-name tolerance") {
     val hits = Tools.callTool(corpus, queryVec, "search_papers",
       Map("top_k" -> "3")).toOption.get

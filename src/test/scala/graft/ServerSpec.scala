@@ -4,11 +4,12 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.{HashJoin, ShuffledHashJoinExec}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import graft.pipeline.Ingest
 import graft.query.{Agent, Server, Tools}
@@ -155,9 +156,7 @@ class ServerSpec extends SparkSpec {
         questions.toSet)
       // read under the full APP.EVAL_METRICS schema: a torn or
       // interleaved line would surface as nulls in always-set columns
-      val evalSchema = Agent.evalMetricsRow(spark, "q",
-        Agent.AgentResult("a", spark.emptyDataFrame.withColumn("score", lit(0.0)),
-          Nil, 0, 0L)).schema
+      val evalSchema = Agent.EvalMetricsSchema
       assert(evalSchema.size == 10)
       val evals = spark.read.schema(evalSchema).json(s"$dir/eval_metrics").collect()
       assert(evals.length == 8)
@@ -212,34 +211,94 @@ class ServerSpec extends SparkSpec {
     }
   }
 
-  /** Spark jobs started by `body`. Listener delivery is FIFO, so the
-    * jobs between a marked canary run before `body` and one run after
-    * it are exactly the jobs `body` started. */
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  /** Spark jobs started by `body`. */
+  private def jobsDuring(body: => Unit): Int =
+    eventsDuring(body).count(_.isLeft)
+
+  /** SQL executions started by `body`, in start order. */
+  private def sqlExecutionsDuring(body: => Unit): Seq[SparkListenerSQLExecutionStart] =
+    eventsDuring(body).collect { case Right(e) => e }
+
+  /** Job starts (Left) and SQL execution starts (Right) posted by
+    * `body`. Listener delivery is FIFO, so the events between a marked
+    * canary run before `body` and one run after it are exactly the
+    * ones `body` started. A canary's execution and jobs carry its mark
+    * as their description. */
+  private def eventsDuring(body: => Unit)
+      : Seq[Either[SparkListenerJobStart, SparkListenerSQLExecutionStart]] = {
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, Either[SparkListenerJobStart, SparkListenerSQLExecutionStart])]()
     val l = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.add(Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")); ()
+        events.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("") -> Left(j)); ()
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => events.add(x.description -> Right(x)); ()
+        case _ =>
       }
     }
+    // a canary's execution start is posted before its jobs start
+    def arrived(mark: String) = events.stream().anyMatch(e => e._1 == mark && e._2.isLeft)
     def canary(mark: String): Unit = {
       val sc = spark.sparkContext
       sc.setJobDescription(mark)
       try spark.range(1).count() finally sc.setJobDescription(null)
       val deadline = System.currentTimeMillis + 30000
-      while (!jobs.contains(mark) && System.currentTimeMillis < deadline) Thread.sleep(20)
-      assert(jobs.contains(mark), s"canary job '$mark' never arrived")
+      while (!arrived(mark) && System.currentTimeMillis < deadline) Thread.sleep(20)
+      assert(arrived(mark), s"canary '$mark' never arrived")
     }
     spark.sparkContext.addSparkListener(l)
     try {
-      canary("jobsDuring:before")
+      canary("eventsDuring:before")
       body
-      canary("jobsDuring:after")
-      val seen = jobs.toArray(Array.empty[String]).toSeq
-      seen.dropWhile(_ != "jobsDuring:before").dropWhile(_ == "jobsDuring:before")
-        .takeWhile(_ != "jobsDuring:after").size
+      canary("eventsDuring:after")
+      events.toArray(Array.empty[(String, Either[SparkListenerJobStart, SparkListenerSQLExecutionStart])])
+        .toSeq.dropWhile(_._1 != "eventsDuring:before").dropWhile(_._1 == "eventsDuring:before")
+        .takeWhile(_._1 != "eventsDuring:after").map(_._2)
     } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("a warm plain /query is one SQL execution over a lineage-free scan of the cached chunks") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_srv_execs").toString
+    val plain = "what is a spark query"
+    val graph = "what is related to spark"
+    withServer(historyDir = Some(dir)) { port =>
+      def query(q: String): Unit =
+        assert(post(port, "/query", s"""{"question": "$q"}""").statusCode() == 200)
+      query(plain); query(graph)
+      val view = corpus.chunksScan
+      val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sharedState.cacheManager
+      def cacheEntries: Int = {
+        val f = cacheManager.getClass.getDeclaredField("cachedData")
+        f.setAccessible(true)
+        f.get(cacheManager).asInstanceOf[IndexedSeq[_]].size
+      }
+      val entriesBefore = cacheEntries
+      val persistedBefore = spark.sparkContext.getPersistentRDDs.size
+      // the job counts of the same requests are pinned in the test above
+      val searches = (1 to 2).map { _ =>
+        val execs = sqlExecutionsDuring(query(plain))
+        assert(execs.size == 1,
+          "one SQL execution: the response and sink lines are written from the rows")
+        execs.head
+      }
+      assert(sqlExecutionsDuring(query(graph)).size == 3,
+        "the query's entity names, the graph lookup and the search")
+      for (search <- searches) {
+        val plan = search.physicalPlanDescription
+        assert(plan.length <= 3000, plan)
+        assert(plan.contains("Scan ExistingRDD") && !plan.contains("InMemoryRelation"), plan)
+      }
+      // every request reads the one view: the same scan, attribute ids included
+      def scanLine(e: SparkListenerSQLExecutionStart) =
+        e.physicalPlanDescription.linesIterator.find(_.contains("Scan ExistingRDD"))
+      assert(scanLine(searches(0)).isDefined && scanLine(searches(0)) == scanLine(searches(1)))
+      assert(corpus.chunksScan eq view)
+      assert(cacheEntries == entriesBefore, "a request must not register a cache entry")
+      assert(spark.sparkContext.getPersistentRDDs.size == persistedBefore)
+    }
   }
 
   test("POST /reset clears the history sinks") {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graft.Bridge
 import graft.sources.Sources
 
 class SourcesSpec extends SparkSpec {
@@ -33,7 +34,7 @@ class SourcesSpec extends SparkSpec {
     val written = new java.io.File(s"$dir/spark").listFiles.toSeq
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
       .flatMap(f => java.nio.file.Files.readAllLines(f.toPath).asScala)
-    val lines = Sources.jsonLines(rec)
+    val lines = Bridge.jsonLines(spark, rec.schema, rec.collect().toSeq)
     assert(lines.length == 3 && lines.toSet == written.toSet)
     Sources.appendJsonLines(spark, lines, s"$dir/log")
     Sources.appendJsonLines(spark, lines.take(1), s"$dir/log")
