@@ -9,19 +9,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    mid-line (the per-query map for 70 queries is ~2 KB and was cut twice).
   *  - The full per-query detail (times, errors, re-timed outliers) goes to
   *    the SPARK_GRAFT_BENCH_OUT file (default bench_out.json), one line,
-  *    same headline fields plus "queries" and "errors".
+  *    same headline fields plus "queries", "counters" and "errors".
+  *
+  * `SPARK_GRAFT_ONLY` (see [[Session.only]]) times a subset: a
+  * fresh-JVM repro of one query, or a profile of it through its
+  * first-pass "counters" (jobs, stages, tasks, executor ms, shuffle
+  * bytes, planning ms, exchanges).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
+    val counters = graft.obs.QueryCounters.install(spark)
     // Materialize EVERY column, not just a count: under count() Catalyst
     // prunes projections (e.g. k1's array_join text assembly) and the
     // timing understates real cost. The `noop` datasource fully
@@ -42,7 +41,7 @@ object Bench {
       val c0 = graft.queries.Derived.buildCount
       val t0 = System.nanoTime()
       val r = try { materialize(fn); ((System.nanoTime() - t0) / 1e9, None) }
-      catch { case e: Throwable => ((System.nanoTime() - t0) / 1e9, Some(e.toString.take(200))) }
+      catch { case e: Throwable => ((System.nanoTime() - t0) / 1e9, Some(graft.obs.Failure.describe(e))) }
       val built = graft.queries.Derived.buildsSince(c0)
       if (built.nonEmpty)
         firstTouch(name) = (firstTouch.getOrElse(name, Seq.empty) ++ built).distinct
@@ -128,12 +127,12 @@ object Bench {
     def storageMb(): Long =
       spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum / (1024 * 1024)
     val storageLog = scala.collection.mutable.ArrayBuffer[Long](storageMb())
-    // Debug/repro knob: SPARK_GRAFT_ONLY=q3_...,q6_... times just that
-    // subset (fresh-JVM single-query repro of bench anomalies).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = Session.only()
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+      .filter { case (n, _) => only.forall(_(n)) }
+    // Per-query Spark counters of the first pass; the bus drains in
+    // reset()/read() run outside the timed region.
+    val firstCounts = scala.collection.mutable.Map[String, String]()
     val firstPass = selected.zipWithIndex.map { case ((name, fn), i) =>
       // min-of-two per checkpoint (the endpoints' rule): a single
       // probe inherits the GC debt of whatever heavy query just
@@ -144,7 +143,10 @@ object Bench {
         ioProbeLog += math.min(ioProbe(), ioProbe())
         storageLog += storageMb()
       }
+      counters.reset()
       val (sec, err) = timeOne(name, fn)
+      firstCounts(name) = counters.read()
+        .map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
       (name, sec, err)
       // Shared derived tables (queries.Derived) stay cached across
       // queries — the production shape: the KG/dedup derivations are
@@ -331,6 +333,9 @@ object Bench {
     }.getOrElse(f""","first_pass_contended":$firstPassContended""")
     val qs = finalResults.map { case (k, v, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val cs = finalResults.map { case (k, _, _) =>
+      graft.util.Jsons.quote(k) + ":" + firstCounts(k)
+    }.mkString("{", ",", "}")
     val errs = finalResults.collect { case (k, _, Some(e)) =>
       s"\"" + k + "\":" + graft.util.Jsons.quote(e)
     }.mkString("{", ",", "}")
@@ -347,7 +352,7 @@ object Bench {
         ks.map(graft.util.Jsons.quote).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val detail =
-      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${finalResults.size},"n_err":$nErr,$probeJson,"derived_first_touch":$touchJson,"queries":$qs,"errors":$errs}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${finalResults.size},"n_err":$nErr,$probeJson,"derived_first_touch":$touchJson,"queries":$qs,"counters":$cs,"errors":$errs}"""
     // Clean line on the REAL stdout (build.sbt: run/outputStrategy =
     // StdoutOutput, so no sbt "[info] " prefix) + a file copy so the
     // driver can recover the metrics even if its stdout parse fails.
@@ -355,8 +360,8 @@ object Bench {
     // PER-QUERY VISIBILITY (round-19 VERDICT item 2): the driver's
     // PERF compare had no per-query data (PERF_r18 per_query:{},
     // n_common:0) because the headline carries only the total. The
-    // full detail line (same fields + "queries" + "derived_first_touch"
-    // + "errors") is therefore ALSO printed to stdout — BEFORE the
+    // full detail line (same fields + "queries", "derived_first_touch",
+    // "counters" and "errors") is ALSO printed to stdout — BEFORE the
     // headline, never instead of it. It cannot ride IN the headline:
     // the driver parses the bench JSON from a 2000-char stdout tail
     // (measured: every BENCH_r*.json "tail" is exactly 2000 chars, and

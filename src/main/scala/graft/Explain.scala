@@ -13,11 +13,8 @@ package graft
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.sql.shuffle.partitions","4")
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // fixed at 4 CPUs: PLANS.md's partition counts must not follow the host
+    val spark = Session.local(4)
     val d = args.headOption.getOrElse("/root/testdata/sf0.001")
 
     val full = new StringBuilder

@@ -359,14 +359,7 @@ object ScaleSmoke {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = if (args.length > 1) args(1).toInt else 10
     val out = if (args.length > 2) args(2) else "target/scale_smoke"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
 
     val scaled = s"$out/x$factor"
     generate(spark, base, scaled, factor)
@@ -376,12 +369,12 @@ object ScaleSmoke {
     // the customer-joining query is excluded rather than measured wrong
     val all =
       if (factor > 10) Queries.filterNot(_ == "s6_enrich_events") else Queries
-    // Dev-iteration subset (Bench's SPARK_GRAFT_ONLY pattern): measure
-    // just the named queries; corpus-level candidate diagnostics are
-    // skipped too — they are unrelated to a named-query timing run
-    val smokeOnly = sys.env.get("SPARK_GRAFT_SMOKE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val measured = smokeOnly.fold(all)(s => all.filter(s))
+    // Dev-iteration subset (SPARK_GRAFT_ONLY, see Session.only):
+    // measure just the selected queries; corpus-level candidate
+    // diagnostics are skipped too — they are unrelated to a
+    // named-query timing run
+    val smokeOnly = Session.only()
+    val measured = smokeOnly.fold(all)(all.filter)
     // Subset runs lack the full sweep's amortized warm-up, so their
     // FIRST timing would charge JVM/codegen bring-up to the base dir
     // (measured: 10.4 s cold vs <1 s warm for the same query) — run
@@ -400,13 +393,13 @@ object ScaleSmoke {
         val err = try {
           SparkEntry.queries(q)(spark, dir)
             .write.mode("overwrite").format("noop").save(); None
-        } catch { case e: Throwable => Some(e.toString.take(200)) }
+        } catch { case e: Throwable => Some(obs.Failure.describe(e)) }
         (q, (System.nanoTime() - t0) / 1e9, err)
       }
       // a diagnostics failure must not discard the wall-times already
       // measured for this dir — degrade to an error marker instead
       def diag(f: => Map[String, Long]): Either[String, Map[String, Long]] =
-        try Right(f) catch { case e: Throwable => Left(e.toString.take(200)) }
+        try Right(f) catch { case e: Throwable => Left(obs.Failure.describe(e)) }
       def unlessOnly(f: => Map[String, Long]): Map[String, Long] =
         if (smokeOnly.isEmpty) f else Map.empty
       val dedup = diag(unlessOnly(queries.DedupQ.candidateDiagnostics(spark, dir)))

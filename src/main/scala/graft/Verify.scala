@@ -1,31 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // Optional third arg: comma-separated query-name prefixes — dump
-    // only matching queries (dev iteration; the driver passes none).
-    val only: String => Boolean = args.lift(2) match {
-      case Some(p) => val ps = p.split(","); name => ps.exists(name.startsWith)
-      case None => _ => true
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only = Session.only() // SPARK_GRAFT_ONLY: dump a subset
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => only(kv._1)).foreach { case (name, fn) =>
+    SparkEntry.queries.filter(kv => only.forall(_(kv._1))).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: ${graft.obs.Failure.describe(e)}")
       }
       // free persisted intermediates between queries (see Bench)
       spark.catalog.clearCache()

@@ -66,11 +66,6 @@ object Tools {
     Seq(queryText).toDF("text").select(array_distinct(names)).head().getSeq[String](0)
   }
 
-  /** Tool names in the registry, in the reference's declaration order
-    * (tool_schemas.py). */
-  val toolNames: Seq[String] = Seq("search_papers", "get_paper_details",
-    "search_knowledge_graph", "summarize_context")
-
   /** Dynamic name→tool dispatch — the reference's extensibility
     * surface (agent.py:65-92): tools are looked up by NAME at call
     * time, unknown names return an error record instead of throwing

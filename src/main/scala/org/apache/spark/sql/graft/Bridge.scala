@@ -22,7 +22,8 @@ import org.apache.spark.sql.types.StructType
   * `org.apache.spark.sql` package to wrap/unwrap without a session
   * registry round-trip (the same access pattern Spark's own
   * connectors use). Besides the two expression hooks it exposes the
-  * few internals the served path needs to skip a query execution.
+  * few internals the served path needs to skip a query execution,
+  * and the listener-bus drain per-query counters read after.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -78,6 +79,11 @@ object Bridge {
         LegacyDateFormats.SIMPLE_DATE_FORMAT, isParsing = false, forTimestampNTZ = false)
         .format(DateTimeUtils.instantToMicros(at))
     }
+
+  /** Block until every listener event posted so far has been
+    * delivered (at most 30 s). */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(30000L)
 
   private def classic(spark: SparkSession) =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

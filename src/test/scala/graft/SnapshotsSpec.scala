@@ -1271,47 +1271,74 @@ class SnapshotsSpec extends SparkSpec {
         (b * 10L until b * 10L + 10L).map(i => (i, s"v$b")).toDF("n", "v"),
         dir, base = b)
     val base = Snapshots.versions(spark, dir).last
-    val landed = new java.util.concurrent.ConcurrentHashMap[Int, Boolean]()
-    var layoutLanded = false
+    // every racer's outcome (racer 7 is the layout re-land): Right(true)
+    // returned, Right(false) raised ConcurrentCommitException, Left any
+    // other throwable — a racer that died of something else must fail
+    // the test by name, never read as "raised"
+    val outcome = new java.util.concurrent.ConcurrentHashMap[Int, Either[Throwable, Boolean]]()
+    def racer(k: Int)(commit: => Unit): Thread = new Thread(() => {
+      outcome.put(k, try { commit; Right(true) } catch {
+        case _: graft.sources.ConcurrentCommitException => Right(false)
+        case t: Throwable => Left(t)
+      }); ()
+    })
     val deleters = (0 until 7).map { k =>
       val pos = Snapshots.positionsOf(spark, dir, base,
         col("n") % 10 < 3 &&
           col(Snapshots.PosFileCol).startsWith(s"v${k + 1}-"))
-      new Thread(() =>
-        try {
-          Snapshots.commitPositionDeletesCommuting(pos, dir, base,
-            maxAttempts = 50)
-          landed.put(k, true); ()
-        } catch {
-          case _: graft.sources.ConcurrentCommitException =>
-            landed.put(k, false); ()
-        })
+      racer(k) {
+        Snapshots.commitPositionDeletesCommuting(pos, dir, base,
+          maxAttempts = 50)
+      }
     }
-    val optimizer = new Thread(() =>
-      try {
-        Snapshots.commitLayout(
-          Snapshots.readResolved(spark, dir, Some(base)), dir, base = base)
-        layoutLanded = true
-      } catch { case _: graft.sources.ConcurrentCommitException => () })
+    val optimizer = racer(7) {
+      Snapshots.commitLayout(
+        Snapshots.readResolved(spark, dir, Some(base)), dir, base = base)
+    }
     val threads = deleters :+ optimizer
     threads.foreach(_.start()); threads.foreach(_.join())
+    // the commit log, one entry a line, for every assertion message
+    def log: String = {
+      import scala.jdk.CollectionConverters._
+      val m = new com.fasterxml.jackson.databind.ObjectMapper()
+      val entries = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+        .iterator().asScala.map(_.getFileName.toString)
+        .filter(_.matches("_entry_v\\d+\\.json")).map { f =>
+          m.readTree(java.nio.file.Files.readString(java.nio.file.Paths.get(dir, f)))
+        }.toSeq.sortBy(_.get("version").asInt())
+      def field(n: com.fasterxml.jackson.databind.JsonNode, k: String) =
+        Option(n.get(k)).fold("-")(_.toString)
+      entries.map(n => Seq("version", "kind", "base", "dataChange", "pfiles")
+        .map(k => s"$k=${field(n, k)}").mkString(" "))
+        .mkString("\ncommit log:\n  ", "\n  ", "")
+    }
+    val outcomes = (0 to 7).map(k => k -> Option(outcome.get(k)))
+    val died = outcomes.collect {
+      case (k, Some(Left(t))) => s"racer $k threw ${graft.obs.Failure.describe(t)}"
+      case (k, None) => s"racer $k recorded no outcome"
+    }
+    assert(died.isEmpty, died.mkString("; ") + log)
+    val landed = outcomes.collect { case (k, Some(Right(ok))) => k -> ok }.toMap
+    val layoutLanded = landed(7)
     val rows = Snapshots.readResolved(spark, dir).collect()
       .map(_.getLong(0)).toSet
     (0 until 7).foreach { k =>
-      val mine = ((k + 1) * 10L until (k + 1) * 10L + 3L).toSet
-      if (landed.get(k))
+      // writer k addresses the files of version k + 1: rows k·10 .. k·10+9
+      val mine = (k * 10L until k * 10L + 3L).toSet
+      if (landed(k))
         assert((rows intersect mine).isEmpty,
-          s"writer $k returned success — its rows must be GONE (no silent no-op)")
+          s"writer $k returned success — its rows must be GONE (no silent no-op)" +
+            s", still visible: ${(rows intersect mine).toSeq.sorted}$log")
       else
         assert(mine.subsetOf(rows),
-          s"writer $k raised — its rows must be untouched")
+          s"writer $k raised — its rows must be untouched$log")
     }
-    val nLanded = (0 until 7).count(landed.get(_))
+    val nLanded = (0 until 7).count(landed)
     assert(rows.size == 80 - 3 * nLanded,
       s"accounting must close exactly: $nLanded landed deletes, " +
-        s"layoutLanded=$layoutLanded, ${rows.size} rows")
+        s"layoutLanded=$layoutLanded, ${rows.size} rows$log")
     assert(nLanded >= 1 || layoutLanded,
-      "some racer must make progress (no livelock)")
+      s"some racer must make progress (no livelock)$log")
   }
 
   test("reading an empty or unknown table fails loudly") {
